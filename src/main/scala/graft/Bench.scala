@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query on
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line
@@ -84,11 +85,11 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // dailyMovingAvg's global window over the ≤1-row-per-day series is
-    // documented-safe (EventOps.dailyMovingAvg scaladoc; PLANS.md
-    // "Global-window warning") but WindowExec warns on every run —
-    // quiet exactly that logger so the bench stderr tail stays free of
-    // scary-but-explained noise. Catalyst strips foldable partition
-    // keys, so a lit(0) partitionBy cannot silence it at the source.
+    // documented-safe (EventOps.dailyMovingAvg scaladoc) but WindowExec
+    // warns on every run — quiet exactly that logger so the bench
+    // stderr tail stays free of scary-but-explained noise. Catalyst
+    // strips foldable partition keys, so a lit(0) partitionBy cannot
+    // silence it at the source.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
@@ -315,7 +316,7 @@ object Bench {
     val streaming: Option[(Option[Double], Int, Option[String], Option[Double], Option[Double])] =
       if (streamSecs > 0 && only.forall(_.contains("streaming")))
         Some(try streamingRowsPerSec() catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             (None, 0, Some(s"stream_failed: ${
               Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}"), None, None)
         })
@@ -355,7 +356,7 @@ object Bench {
         timings(name) = runs(runs.length / 2) // median
         minimums(name) = runs.head
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
             .linesIterator.take(1).mkString.take(200)
       }

@@ -702,8 +702,8 @@ object SparkEntry {
     // the newly-arrived shard, the rest the existing corpus — every
     // emitted pair touches the shard, old-vs-old is never re-paired.
     // Same oracle soundness as minhash_near_dups (exact-Jaccard
-    // verification ⇒ precision 1; the corpus's near-dup population
-    // sits at J≥0.9 where band recall loss is ≤3.5e-5/pair), with the
+    // verification ⇒ precision 1; exact recall presumes the corpus's
+    // pairs sit at J ≥ 0.9 — the precondition stated there), with the
     // ≥1-new-side restriction mirrored in the SQL.
     "incremental_near_dups" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
@@ -1265,8 +1265,8 @@ object SparkEntry {
     * [[graft.ops.VectorOps.signCodes]] exactly (integer shift/sum,
     * no float math). */
   /** Shared oracle CTE: the zero-filled daily count grid with day
-    * index `t` — mirrors EventOps.dailyGrid (the spectral/randomness
-    * battery's shared input). */
+    * index `t` — mirrors EventOps.dailyGrid over the per-day event
+    * count (the spectral/randomness battery's shared input). */
   private val dailyGridCte: String =
     "daily AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS day, " +
       "CAST(count(*) AS BIGINT) AS cnt FROM events GROUP BY 1), " +
@@ -7208,13 +7208,18 @@ object SparkEntry {
     // Mirrors DedupOps.minhashNearDups AGAINST THE EXACT PIPELINE: the
     // operator verifies every banded candidate with exact Jaccard over
     // the full shingle-hash sets, so precision is 1 by construction
-    // and the only hash-seed-bound part is banding recall. This
-    // corpus's entire ≥0.5 near-dup population sits at J ≥ 0.9, where
-    // a band of 4 matches with p = J⁴ ≥ 0.656 and missing all 8 bands
-    // has p = (1-J⁴)⁸ ≤ 3.5e-5 — and the fixed xxhash64 seed makes the
-    // outcome deterministic: verified equal to the exact pair set,
-    // value for value. A banding/verification regression breaks this
-    // hash; the RecallGateSpec covers the probabilistic contract.
+    // and the only hash-seed-bound part is banding recall. The
+    // exact-equality gate therefore PRESUMES a corpus whose ≥0.5 pairs
+    // sit at J ≥ 0.9: a band of 4 matches with p = J⁴ ≥ 0.656, so
+    // missing all 8 bands has p = (1-J⁴)⁸ ≤ 2.0e-4 per pair (1.5e-2
+    // at J = 0.8, 0.6 at J = 0.5). RecallGateSpec asserts the
+    // precondition on sf0.01; sf0.001 (min J 0.889) and sf0.1 (one
+    // J = 0.8 pair) sit just under it, and the fixed xxhash64 seed
+    // finds every pair there. On a mid-J corpus the gate does not
+    // apply: perfbench's 30-word corpus misses 12 of 254 pairs, all at
+    // J 0.50-0.75 — expected banding loss. A banding/verification
+    // regression breaks this hash; RecallGateSpec covers the
+    // probabilistic contract.
     "minhash_near_dups" ->
       (s"WITH $shingleCtes, " +
         "shared AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS shared " +
@@ -7286,9 +7291,9 @@ object SparkEntry {
         ") AS t(method, top1_id, cos_sim)"),
     // Mirrors DedupOps.fuzzyContamination: the exact cross-split pair
     // set (same soundness argument as minhash_near_dups — banded
-    // candidates are exact-verified, and this corpus's near-dup
-    // population sits at J ≥ 0.9 where band-miss probability is
-    // ≤ 3.5e-5/pair), re-oriented eval-side-first.
+    // candidates are exact-verified, and exact recall presumes pairs
+    // at J ≥ 0.9 — the precondition stated there), re-oriented
+    // eval-side-first.
     "fuzzy_contamination" ->
       (s"WITH $shingleCtes, " +
         "shared AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS shared " +

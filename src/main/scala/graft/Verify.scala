@@ -1,8 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (tools/compare_oracle.py). Every query that throws is named in
+  * failed.json (query → first message line) beside oracle_sql.json,
+  * and any failure makes the run exit 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -19,8 +23,8 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // documented-safe global window in dailyMovingAvg — see PLANS.md
-    // "Global-window warning" for why this logger is quieted
+    // documented-safe global window in dailyMovingAvg (its scaladoc
+    // says why) — WindowExec warns on every run, so quiet that logger
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
@@ -29,6 +33,7 @@ object Verify {
     // cheap single-query oracle pre-flights while iterating.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -46,8 +51,10 @@ object Verify {
         }
         out.select(cols.toSeq: _*).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
+          .linesIterator.take(1).mkString
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -62,9 +69,16 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def obj(kv: Iterable[(String, String)]): String =
+      kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/failed.json"), obj(failed))
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} queries failed: ${failed.keys.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

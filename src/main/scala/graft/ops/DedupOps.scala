@@ -486,12 +486,8 @@ object DedupOps {
 
   /** Candidate near-dup pairs from band-bucket collisions: shuffle on
     * (band_id, bucket) — only docs sharing a bucket are ever paired, so
-    * the join cost is Σ bucket_size², not n². `maxBucket` caps
-    * degenerate buckets (all-identical spam) to bound the worst case. */
-  def minhashCandidates(docs: DataFrame, numHashes: Int = 32, bands: Int = 8,
-      k: Int = 3, maxBucket: Long = 500): DataFrame =
-    candidatePairs(cappedBands(docs, numHashes, bands, k, maxBucket))
-
+    * the join cost is Σ bucket_size², not n². The `maxBucket` cap in
+    * [[cappedBands]] bounds degenerate buckets (all-identical spam). */
   private def candidatePairs(capped: DataFrame): DataFrame =
     capped.as("a")
       .join(capped.as("b"),

@@ -16,10 +16,6 @@ import org.apache.spark.sql.graft.ColumnShim
   */
 object DocOps {
 
-  /** Language equality filter (P8, `src/spark_stream.py:95-96`). */
-  def filterLanguage(docs: DataFrame, language: String): DataFrame =
-    docs.filter(col("lang") === lit(language.toLowerCase))
-
   /** Case-insensitive keyword filter over text (P9,
     * `src/spark_stream.py:98-104`): single pre-built alternation regex,
     * exactly like the reference builds its pattern driver-side. */
@@ -55,12 +51,6 @@ object DocOps {
       .filter(trim(col("hashtag")) =!= "")
       .groupBy(lower(col("hashtag")).as("hashtag"))
       .agg(count(lit(1)).as("cnt"))
-
-  /** HTML strip (F8 — producer-side in the reference,
-    * `/root/reference/src/mastodon_to_kafka.py:26-29` — pulled into the
-    * engine as a column transform). */
-  def stripHtml(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(text, "<[^>]+>", "")
 
   // ----- training-data-pipeline text analysis (north-star extensions) -----
 

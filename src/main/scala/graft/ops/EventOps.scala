@@ -542,15 +542,11 @@ object EventOps {
   def theilSenTrendByType(events: DataFrame): DataFrame = {
     val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val types = daily.select("event_type").distinct()
-    val grid = days.crossJoin(types)
-      .join(daily, Seq("event_type", "day"), "left")
+    val grid = dailyGrid(daily, "event_type")
       .select(col("event_type"),
         datediff(col("day"), lit("1970-01-01").cast("date")).cast("long")
           .as("x"),
-        coalesce(col("cnt"), lit(0L)).as("y"))
+        col("cnt").as("y"))
     val slopes = grid.as("a")
       .join(grid.as("b"),
         col("a.event_type") === col("b.event_type") &&
@@ -576,13 +572,7 @@ object EventOps {
   def spearmanTypePairs(events: DataFrame): DataFrame = {
     val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val types = daily.select("event_type").distinct()
-    val grid = days.crossJoin(types)
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
+    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
     val wr = Window.partitionBy("event_type").orderBy(col("cnt").asc)
     val wt = Window.partitionBy("event_type", "cnt")
     val ranked = grid.select(col("event_type"), col("day"),
@@ -674,13 +664,8 @@ object EventOps {
     * rank prefix and moments all run on calendar×types rows. */
   def kruskalWallisDailyCounts(events: DataFrame): DataFrame = {
     val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val types = daily.select("event_type").distinct()
-    val grid = days.crossJoin(types)
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), coalesce(col("cnt"), lit(0L)).as("v"))
+      .agg(count(lit(1)).as("v"))
+    val grid = dailyGrid(daily, "event_type").select("event_type", "v")
     val byVal = grid.groupBy(col("v"), col("event_type"))
       .agg(count(lit(1)).as("c"))
     val tot = byVal.groupBy("v").agg(sum("c").as("ct"))
@@ -731,13 +716,7 @@ object EventOps {
   def kendallTauTypePairs(events: DataFrame): DataFrame = {
     val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val types = daily.select("event_type").distinct()
-    val grid = days.crossJoin(types)
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
+    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
     val p = grid.as("a").join(grid.as("b"),
         col("a.day") === col("b.day") &&
           col("a.event_type") < col("b.event_type"))
@@ -809,17 +788,7 @@ object EventOps {
   def typeCountCorrelations(events: DataFrame): DataFrame = {
     val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    // dense min..max calendar (the acfDailyCounts construction) — an
-    // observed-day axis would silently drop all-zero days from every
-    // pair's series, inflating correlations against the stated
-    // zero-filled contract
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val types = daily.select("event_type").distinct()
-    val grid = days.crossJoin(types)
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
+    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
     val m = grid.as("a")
       .join(grid.as("b"),
         col("a.day") === col("b.day") &&
@@ -869,13 +838,7 @@ object EventOps {
   def grangerTypePairs(events: DataFrame): DataFrame = {
     val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val types = daily.select("event_type").distinct()
-    val grid = days.crossJoin(types)
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
+    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
       .localCheckpoint() // three self-references below
     val yf = grid.select(col("event_type").as("ta"), col("day"),
       col("cnt").as("y"))
@@ -943,13 +906,11 @@ object EventOps {
   def durbinWatsonDaily(events: DataFrame): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.join(daily, Seq("day"), "left")
+    val grid = dailyGrid(daily)
       .select(
         datediff(col("day"), lit("1970-01-01").cast("date")).cast("long")
           .as("x"),
-        coalesce(col("cnt"), lit(0L)).as("y"))
+        col("cnt").as("y"))
       .localCheckpoint() // moments + residuals + shifted self all read it
     def d38(c: Column) = c.cast("decimal(38,0)")
     val m = grid.agg(count(lit(1)).as("n"),
@@ -1013,10 +974,7 @@ object EventOps {
   def runsTestDaily(events: DataFrame): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("y"))
+    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
     val ranked = grid.withColumn("rn",
       row_number().over(Window.orderBy(col("y").asc, col("day").asc))
         .cast("long"))
@@ -1129,13 +1087,11 @@ object EventOps {
   def friedmanDowTest(events: DataFrame): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.join(daily, Seq("day"), "left")
+    val grid = dailyGrid(daily)
       .select(
         (datediff(col("day"), lit("1970-01-01").cast("date")).cast("long") +
           lit(3L)).as("dd3"),
-        coalesce(col("cnt"), lit(0L)).as("y"))
+        col("cnt").as("y"))
       .select((col("dd3") % lit(7L) + lit(1L)).as("isodow"),
         expr("dd3 div 7").as("wk"), col("y"))
     val complete = grid.groupBy("wk").agg(count(lit(1)).as("nd"))
@@ -1917,8 +1873,7 @@ object EventOps {
     // safe HERE for the reason in the scaladoc (post-aggregation
     // series, ≤1 row/day); a constant partitionBy(lit) does not
     // silence it — Catalyst strips foldable partition expressions —
-    // so Bench/Verify quiet that one logger instead (see PLANS.md
-    // "Global-window warning").
+    // so Bench/Verify quiet that one logger instead.
     val w = Window.orderBy(col("day"))
     byDay.select(
       col("day"), col("toots"),
@@ -2901,10 +2856,7 @@ object EventOps {
     require(maxLag >= 1, s"maxLag >= 1: $maxLag")
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val cal = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = cal.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("cnt"))
+    val grid = dailyGrid(daily).select("day", "cnt")
     val lags = events.sparkSession.range(1, maxLag + 1)
       .select(col("id").cast("int").as("lag"))
     val shifted = grid.crossJoin(broadcast(lags))
@@ -2953,11 +2905,8 @@ object EventOps {
     require(maxLag >= 1, s"maxLag >= 1: $maxLag")
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val cal = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = cal.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).cast("double").as("y"))
-    val series = grid
+    val series = dailyGrid(daily)
+      .select(col("day"), col("cnt").cast("double").as("y"))
       .agg(array_sort(collect_list(struct(col("day"), col("y")))).as("sd"))
       .select(transform(col("sd"), x => x.getField("y")).as("ys"))
       .filter(size(col("ys")) > maxLag)
@@ -4138,10 +4087,7 @@ object EventOps {
   def mannKendallDaily(events: DataFrame): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("y"))
+    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
       .localCheckpoint() // pair join + tie groups + count all read it
     val s = grid.as("a").join(grid.as("b"), col("a.day") < col("b.day"))
       .agg(sum(when(col("b.y") > col("a.y"), 1L)
@@ -4186,7 +4132,9 @@ object EventOps {
     * back, one aux reduce — nothing corpus-sized past the first agg. */
   def breuschPaganDaily(events: DataFrame): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val g = dailyGrid(events)
+    val daily = events.groupBy(to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt"))
+    val g = dailyGrid(daily)
       .select((col("t") + lit(1L)).as("t"), col("cnt").as("y"))
       .localCheckpoint() // moment reduce + the residual pass read it
     val m = g.agg(count(lit(1)).as("n"), sum("t").as("sx"),
@@ -4245,7 +4193,9 @@ object EventOps {
     * 2-group collapse folded to a single row. */
   def chowBreakDaily(events: DataFrame): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val g = dailyGrid(events)
+    val daily = events.groupBy(to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt"))
+    val g = dailyGrid(daily)
       .select((col("t") + lit(1L)).as("t"), col("cnt").as("y"))
       .localCheckpoint() // count probe + the segment collapse read it
     val nRow = g.agg(count(lit(1)).as("n"))
@@ -4612,10 +4562,7 @@ object EventOps {
   def pettittChangepointDaily(events: DataFrame): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("y"))
+    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
       .localCheckpoint() // value groups + totals + the day join read it
     val wv = Window.orderBy(col("y").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -4890,10 +4837,7 @@ object EventOps {
   def rollingMedianDaily(events: DataFrame, window: Int = 3): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n"))
-    val cal = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = cal.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("n"), lit(0L)).as("n"))
+    val grid = dailyGrid(daily).select("day", "n")
       .localCheckpoint()
     val med = grid.as("c").join(grid.as("o"),
         datediff(col("o.day"), col("c.day")).between(-window, window))
@@ -4925,12 +4869,7 @@ object EventOps {
   def forecastBacktest(events: DataFrame): DataFrame = {
     val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val cal = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = cal.crossJoin(daily.select("event_type").distinct())
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
+    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
     val w = Window.partitionBy("event_type").orderBy(col("day").asc)
     grid
       .withColumn("l1", lag(col("cnt"), 1).over(w))
@@ -5880,13 +5819,8 @@ object EventOps {
     * sums and moments all run on the calendar×types grid. */
   def brownForsytheDaily(events: DataFrame): DataFrame = {
     val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val types = daily.select("event_type").distinct()
-    val grid = days.crossJoin(types)
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), coalesce(col("cnt"), lit(0L)).as("v"))
+      .agg(count(lit(1)).as("v"))
+    val grid = dailyGrid(daily, "event_type").select("event_type", "v")
     val med2 = grid.groupBy("event_type")
       .agg(round(median(col("v")) * lit(2.0), 0).cast("long").as("m2"))
     val z = grid.join(broadcast(med2), "event_type")
@@ -6029,10 +5963,7 @@ object EventOps {
   def seasonalDecompositionDaily(events: DataFrame): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("n"), lit(0L)).as("n"))
+    val grid = dailyGrid(daily).select("day", "n")
     val w7 = Window.orderBy(col("day").asc).rowsBetween(-3, 3)
     val det = grid
       .withColumn("sum7", sum(col("n")).over(w7))
@@ -6092,11 +6023,8 @@ object EventOps {
       beta: Double = 0.1, gamma: Double = 0.2): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("n"), lit(0L)).cast("double").as("y"))
-    val series = grid
+    val series = dailyGrid(daily)
+      .select(col("day"), col("n").cast("double").as("y"))
       .agg(array_sort(collect_list(struct(col("day"), col("y")))).as("sd"))
       .select(transform(col("sd"), x => x.getField("y")).as("ys"))
       .filter(size(col("ys")) >= 14)
@@ -6157,10 +6085,7 @@ object EventOps {
       sizes: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("y"))
+    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
     // rank BEFORE the checkpoint so the serial window's collapse
     // lineage stays visible to the sweep (isotonic convention); the
     // checkpointed ranked frame then serves the count + 4 block scans
@@ -6244,10 +6169,7 @@ object EventOps {
       sizes: Seq[Int] = Seq(4, 8, 16)): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("y"))
+    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
     // rank + global prefix BEFORE the checkpoint (the hurst/isotonic
     // sweep-visibility convention); the checkpointed frame then
     // serves the totals probe and |sizes| block scans
@@ -6331,10 +6253,7 @@ object EventOps {
       horizon: Int = 7): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("y"))
+    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
       .localCheckpoint() // residual shift + last-week probe share it
     val prev = grid.select(date_add(col("day"), 7).as("day"),
       col("y").as("y_prev"))
@@ -6386,11 +6305,8 @@ object EventOps {
       horizon: Int = 7): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("n"), lit(0L)).cast("double").as("y"))
-    val series = grid
+    val series = dailyGrid(daily)
+      .select(col("day"), col("n").cast("double").as("y"))
       .agg(array_sort(collect_list(struct(col("day"), col("y")))).as("sd"))
       .select(transform(col("sd"), x => x.getField("y")).as("ys"))
       .filter(size(col("ys")) >= 2)
@@ -6433,11 +6349,8 @@ object EventOps {
       beta: Double = 0.1, gamma: Double = 0.2): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("n"), lit(0L)).cast("double").as("y"))
-    val series = grid
+    val series = dailyGrid(daily)
+      .select(col("day"), col("n").cast("double").as("y"))
       .agg(array_sort(collect_list(struct(col("day"), col("y")))).as("sd"))
       .select(transform(col("sd"), x => x.getField("y")).as("ys"))
       .filter(size(col("ys")) >= 14)
@@ -7003,10 +6916,7 @@ object EventOps {
   def grubbsDaily(events: DataFrame): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val cal = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = cal.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("y"))
+    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
     val st = grid.agg(count(lit(1)).as("n"), sum("y").as("s"),
       sum(col("y").cast("decimal(38,0)") * col("y")).as("ss"))
     val nD = col("n").cast("double")
@@ -7053,13 +6963,7 @@ object EventOps {
     val daily = events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val cal = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val types = daily.select("event_type").distinct()
-    val grid = cal.crossJoin(broadcast(types))
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
+    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
     val w = Window.partitionBy("event_type").orderBy(col("day").asc)
     val run = grid.select(col("event_type"), col("day"), col("cnt"),
       sum(col("cnt")).over(
@@ -7114,10 +7018,7 @@ object EventOps {
     require(maxLag >= 1, s"maxLag >= 1: $maxLag")
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val cal = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = cal.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("y"))
+    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
     val st = grid.agg(count(lit(1)).as("n"), sum("y").as("s"))
     val dev = grid.crossJoin(broadcast(st))
       .select(col("day"), col("n"),
@@ -7168,10 +7069,7 @@ object EventOps {
   def dfTestDaily(events: DataFrame): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val cal = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = cal.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("y"))
+    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
     val pairs = grid.as("a")
       .join(grid.select(expr("date_add(day, -1)").as("day"),
         col("y").as("y1")).as("b"), Seq("day"))
@@ -7219,11 +7117,7 @@ object EventOps {
     val daily = events.filter(col("event_type") === "purchase")
       .groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val cal = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = cal.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("y"))
-    val series = grid
+    val series = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
       .agg(array_sort(collect_list(struct(col("day"), col("y")))).as("sd"),
         count(lit(1)).as("n_days"))
       .select(transform(col("sd"), x => x.getField("y")).as("ys"),
@@ -7278,13 +7172,8 @@ object EventOps {
     val daily = events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val cal = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val types = daily.select("event_type").distinct()
-    val grid = cal.crossJoin(broadcast(types))
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("cnt"), lit(0L)).as("v"))
+    val grid = dailyGrid(daily, "event_type")
+      .select(col("event_type"), col("day"), col("cnt").as("v"))
     // per-(type, value) doubled midrank: 2r = 2·(# strictly below) +
     // (# tied) + 1, off the collapsed count-value frame
     val byVal = grid.groupBy("event_type", "v")
@@ -7337,12 +7226,7 @@ object EventOps {
   def dmNaiveVsSeasonal(events: DataFrame): DataFrame = {
     val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val cal = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = cal.crossJoin(broadcast(daily.select("event_type").distinct()))
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
+    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
     val w = Window.partitionBy("event_type").orderBy(col("day").asc)
     val d = grid
       .withColumn("l1", lag(col("cnt"), 1).over(w))
@@ -7425,10 +7309,7 @@ object EventOps {
       .cast("bigint")
     val daily0 = events.select(to_date(col("ts")).as("day"), cents.as("c"))
       .groupBy("day").agg(sum("c").as("rev"))
-    val cal = daily0.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val daily = cal.join(daily0, Seq("day"), "left")
-      .select(col("day"), coalesce(col("rev"), lit(0L)).as("rev"))
+    val daily = dailyGrid(daily0).select("day", "rev")
       .localCheckpoint()
     val st = daily.agg(count(lit(1)).as("n"),
       round(expr("percentile(rev, 0.05)") / 100.0, 6).as("var95"))
@@ -7516,10 +7397,7 @@ object EventOps {
     require(maxLag >= 1, s"maxLag >= 1: $maxLag")
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val cal = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = cal.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("y"))
+    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
     val st = grid.agg(count(lit(1)).as("n"), sum("y").as("s"))
     val dev = grid.crossJoin(broadcast(st))
       .select(col("day"), col("n"),
@@ -7553,18 +7431,27 @@ object EventOps {
 
   // ---------- spectral / randomness / drawdown battery (r16) ----------
 
-  /** Zero-filled daily count grid over the min..max calendar — the
-    * shared input of the spectral and randomness tests below (the
-    * [[acfDailyCounts]] grid, factored). One corpus-sized hash agg;
-    * everything downstream runs on calendar cardinality. */
-  private def dailyGrid(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    daily.agg(min("day").as("d0"), max("day").as("d1"))
+  /** The dense, zero-filled min..max calendar of a per-day aggregate,
+    * shared by the daily-series statistics here ([[transferEntropyDaily]]
+    * alone builds its own). `daily` holds a DATE `day`, the `keys`
+    * (e.g. event_type) and any measures; the calendar is crossed with
+    * the broadcast distinct keys, `daily` left-joined back and every
+    * measure coalesced to 0, so all-zero days stay in every series (an
+    * observed-day axis would drop them) and a key absent from `daily`
+    * has no rows. Adds the day index `t` (days since the first day).
+    * Output: day, t, keys…, measures…. Pure — no job, no checkpoint:
+    * the caller's aggregate is the one corpus-sized stage. */
+  private def dailyGrid(daily: DataFrame, keys: String*): DataFrame = {
+    val measures = daily.schema.fields
+      .filterNot(f => f.name == "day" || keys.contains(f.name))
+    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
       .select(explode(sequence(col("d0"), col("d1"))).as("day"), col("d0"))
-      .join(daily, Seq("day"), "left")
-      .select(col("day"), datediff(col("day"), col("d0")).as("t"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
+    val cal = if (keys.isEmpty) days
+      else days.crossJoin(broadcast(daily.select(keys.map(col): _*).distinct()))
+    cal.join(daily, keys :+ "day", "left")
+      .select(Seq(col("day"), datediff(col("day"), col("d0")).as("t")) ++
+        keys.map(col) ++ measures.map(f =>
+          coalesce(col(f.name), lit(0).cast(f.dataType)).as(f.name)): _*)
   }
 
   /** Yuen's trimmed-mean t-test between the A/B arms (Yuen '74) —
@@ -7787,13 +7674,11 @@ object EventOps {
   def pageTrendDow(events: DataFrame): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.join(daily, Seq("day"), "left")
+    val grid = dailyGrid(daily)
       .select(
         (datediff(col("day"), lit("1970-01-01").cast("date")).cast("long") +
           lit(3L)).as("dd3"),
-        coalesce(col("cnt"), lit(0L)).as("y"))
+        col("cnt").as("y"))
       .select((col("dd3") % lit(7L) + lit(1L)).as("isodow"),
         expr("dd3 div 7").as("wk"), col("y"))
     val complete = grid.groupBy("wk").agg(count(lit(1)).as("nd"))
@@ -7967,13 +7852,8 @@ object EventOps {
     * dense-calendar fill, one k-row aggregate. */
   def negbinFitByType(events: DataFrame): DataFrame = {
     val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val types = daily.select("event_type").distinct()
-    val grid = days.crossJoin(types)
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), coalesce(col("cnt"), lit(0L)).as("x"))
+      .agg(count(lit(1)).as("x"))
+    val grid = dailyGrid(daily, "event_type").select("event_type", "x")
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val m = grid.groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("x").as("sx"),
@@ -8015,11 +7895,7 @@ object EventOps {
   def distanceCorrelationDaily(events: DataFrame): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("x"), countDistinct(col("user_id")).as("y"))
-    val cal = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = cal.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("x"), lit(0L)).as("x"),
-        coalesce(col("y"), lit(0L)).as("y"))
+    val grid = dailyGrid(daily).select("day", "x", "y")
       .localCheckpoint() // both sides of the pair join + row sums
     val pairsAb = grid.as("i").crossJoin(grid.as("j")) // calendar²-bounded
       .select(col("i.day").as("di"), col("j.day").as("dj"),
@@ -8071,13 +7947,7 @@ object EventOps {
   def partialCorrTypePairs(events: DataFrame): DataFrame = {
     val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val types = daily.select("event_type").distinct()
-    val grid = days.crossJoin(types)
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
+    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
       .localCheckpoint() // pair matrix + the control joins read it
     val zs = grid.groupBy("day").agg(sum("cnt").as("z"))
     val gz = grid.join(zs, "day")
@@ -8140,13 +8010,11 @@ object EventOps {
   def seasonalMannKendall(events: DataFrame): DataFrame = {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.join(daily, Seq("day"), "left")
+    val grid = dailyGrid(daily)
       .select(col("day"),
         ((datediff(col("day"), lit("1970-01-01").cast("date"))
           .cast("long") + lit(3L)) % lit(7L) + lit(1L)).as("dow"),
-        coalesce(col("cnt"), lit(0L)).as("y"))
+        col("cnt").as("y"))
       .localCheckpoint() // pair join + per-season ties both read it
     val s = grid.as("a")
       .join(grid.as("b"),
@@ -8296,7 +8164,9 @@ object EventOps {
     import session.implicits._
     val pf = periods.map(p => (p.toLong, 2.0 * math.Pi / p))
       .toDF("period", "w")
-    val terms = dailyGrid(events).crossJoin(broadcast(pf))
+    val daily = events.groupBy(to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt"))
+    val terms = dailyGrid(daily).crossJoin(broadcast(pf))
       .select(col("period"),
         round(col("cnt").cast("double") *
           cos(col("t").cast("double") * col("w")) * lit(1000000.0), 0)
@@ -8371,7 +8241,9 @@ object EventOps {
     * calendar, a ≤6-row pattern frame. */
   def permutationEntropyDaily(events: DataFrame): DataFrame = {
     val w = Window.orderBy(col("t").asc)
-    val tri = dailyGrid(events)
+    val daily = events.groupBy(to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt"))
+    val tri = dailyGrid(daily)
       .select(col("t"), col("cnt").as("x0"),
         lead(col("cnt"), 1).over(w).as("x1"),
         lead(col("cnt"), 2).over(w).as("x2"))
@@ -8419,7 +8291,9 @@ object EventOps {
     * Shape: one daily collapse, one lead window, then a
     * calendar²-bounded template pair join — never corpus-sized. */
   def sampleEntropyDaily(events: DataFrame): DataFrame = {
-    val grid = dailyGrid(events)
+    val daily = events.groupBy(to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt"))
+    val grid = dailyGrid(daily)
       .localCheckpoint() // sigma lanes + the template window read it
     val dec = (c: Column) => c.cast("decimal(38,0)")
     // population sigma of the WHOLE series; r = 0.2 sigma
@@ -8476,7 +8350,9 @@ object EventOps {
     * mean/variance are rationals of n; one final division. n < 3 →
     * no row. */
   def turningPointsDaily(events: DataFrame): DataFrame = {
-    val series = dailyGrid(events)
+    val daily = events.groupBy(to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt"))
+    val series = dailyGrid(daily)
       .agg(array_sort(collect_list(struct(col("t"), col("cnt")))).as("sd"))
       .select(transform(col("sd"), x => x.getField("cnt")).as("ys"))
       .filter(size(col("ys")) >= 3)
@@ -8510,7 +8386,9 @@ object EventOps {
     * day span, never by corpus size. Constant series (zero
     * denominator) → NULL, stated. */
   def bartelsRankDaily(events: DataFrame): DataFrame = {
-    val series = dailyGrid(events)
+    val daily = events.groupBy(to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt"))
+    val series = dailyGrid(daily)
       .agg(array_sort(collect_list(struct(col("t"), col("cnt")))).as("sd"))
       .select(transform(col("sd"), x => x.getField("cnt")).as("ys"))
       .filter(size(col("ys")) >= 4)
@@ -8546,7 +8424,9 @@ object EventOps {
     * Determinism: counts exact BIGINT off the one array row; z is ONE
     * pinned division; zero non-tied pairs → NULL z, stated. */
   def coxStuartDaily(events: DataFrame): DataFrame = {
-    val series = dailyGrid(events)
+    val daily = events.groupBy(to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt"))
+    val series = dailyGrid(daily)
       .agg(array_sort(collect_list(struct(col("t"), col("cnt")))).as("sd"))
       .select(transform(col("sd"), x => x.getField("cnt")).as("ys"))
       .filter(size(col("ys")) >= 2)
@@ -8607,11 +8487,7 @@ object EventOps {
     val daily = events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"),
         countDistinct(col("user_id")).as("du"))
-    val cal = daily.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = cal.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("cnt"), lit(0L)).as("cnt"),
-        coalesce(col("du"), lit(0L)).as("du"))
+    val grid = dailyGrid(daily).select("day", "cnt", "du")
     val lags = events.sparkSession.range(-maxLag, maxLag + 1)
       .select(col("id").cast("int").as("lag"))
     val shifted = grid.crossJoin(broadcast(lags))
@@ -8649,7 +8525,9 @@ object EventOps {
     * → no rows. Shape: the grid collapses once; each level is one
     * hash agg over ≤ 2^L rows. */
   def haarEnergyDaily(events: DataFrame, maxLevel: Int = 6): DataFrame = {
-    val grid = dailyGrid(events).select(col("t"), col("cnt"))
+    val daily = events.groupBy(to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt"))
+    val grid = dailyGrid(daily).select("t", "cnt")
     // lmax via an integer comparison chain, NOT floor(log2(n)) — at an
     // exact power of two the two engines' log implementations can land
     // an ulp apart and floor to different levels
@@ -8909,6 +8787,7 @@ object EventOps {
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
+    // not dailyGrid: its key cross would drop an event-free type's zero series
     val days = daily.agg(min("day").as("d0"), max("day").as("d1"))
       .select(explode(sequence(col("d0"), col("d1"))).as("day"))
     def series(t: String, out: String) = {

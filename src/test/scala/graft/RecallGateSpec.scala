@@ -29,7 +29,7 @@ class RecallGateSpec extends SparkSpec {
     // sound only because (a) candidates are exact-verified (precision
     // 1 by construction) and (b) this corpus's entire >=0.5 near-dup
     // population sits at J >= 0.9, where missing all 8 bands of 4 has
-    // p = (1-J^4)^8 <= 3.5e-5. (b) is a TESTDATA property: regenerated
+    // p = (1-J^4)^8 <= 2.0e-4. (b) is a TESTDATA property: regenerated
     // data or changed shingle/band parameters could silently break it
     // and surface as a phantom red oracle row that looks like an
     // engine bug. Assert it here so the precondition fails loudly at

@@ -98,6 +98,28 @@ class RoundHalfUpSpec extends SparkSpec {
     assert(bad == 0L)
   }
 
+  test("SQL scale outside [0, 15] fails with the usage string") {
+    // built through the registered builder, as a SQL call would be —
+    // the shared test session carries no extensions (the CosineSimSpec
+    // registry pattern)
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.functions.GraftExtensions().apply(ext)
+    val build = org.apache.spark.sql.graft.ColumnShim
+      .registerFunctions(ext, FunctionRegistry.builtin.clone())
+      .lookupFunctionBuilder(FunctionIdentifier("graft_round")).get
+    assert(build(Seq(Literal(1.25), Literal(15))).eval(null) == 1.25)
+    for (bad <- Seq(16, 20, -1)) {
+      val e = intercept[IllegalArgumentException] {
+        build(Seq(Literal(1.25), Literal(bad)))
+      }
+      assert(e.getMessage.contains("graft_round(x, scale)") &&
+        e.getMessage.contains("[0, 15]"), e.getMessage)
+    }
+  }
+
   test("null propagates; not a CodegenFallback") {
     val out = Seq[Option[Double]](None).toDF("x")
       .select(RoundHalfUp.roundFused(col("x"), 4)).collect()
