@@ -1,6 +1,8 @@
 package graft.batch
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import graft.ops.{EventOps => _, _}
 
@@ -14,7 +16,8 @@ import graft.ops.{EventOps => _, _}
 object BatchJobs {
 
   /** Storage abstraction: the reference's JDBC table store
-    * (`df.write.mode(...).jdbc(...)`) generalized. */
+    * (`df.write.mode(...).jdbc(...)`) generalized. `analytics` calls
+    * `write` for different tables from concurrent threads. */
   trait TableStore {
     def read(table: String): DataFrame
     def write(table: String, df: DataFrame, mode: SaveMode): Unit
@@ -57,7 +60,10 @@ object BatchJobs {
   }
 
   /** Stage 3 — analytics (= `batch_analytics.py`): cache the clean
-    * table once, fan out to the seven aggregate tables. The
+    * table once, fan out to the seven aggregate tables. The seven
+    * writes are independent and run concurrently ([[inParallel]]); the
+    * first failure is rethrown once all have finished, and the clean
+    * table is unpersisted only then. The
     * `coalesce(created_at, ingested_at)` mirrors
     * `batch_analytics.py:19`. */
   def analytics(store: TableStore, activeMin: Long = 5): Unit = {
@@ -65,6 +71,7 @@ object BatchJobs {
       .withColumn("ts", coalesce(col("created_at"), col("ingested_at")))
       .cache()
     try {
+      loadCache(clean)
       val hourly = clean.groupBy(date_trunc("hour", col("ts")).as("hour"))
         .agg(count(lit(1)).as("toots"))
       val daily = clean.groupBy(to_date(col("ts")).as("day"))
@@ -87,7 +94,7 @@ object BatchJobs {
       }
       val avgLen = clean.groupBy("username")
         .agg(avg(length(col("text"))).as("avg_len"))
-      Seq(
+      inParallel(Seq(
         "hourly_toot_counts" -> hourly,
         "daily_toot_counts" -> daily,
         "user_activity_counts" -> userActivity,
@@ -95,8 +102,52 @@ object BatchJobs {
         "hashtags_per_day_counts" -> tagsPerDay,
         "top_hashtag_per_day" -> topTagPerDay,
         "avg_toot_length_by_user_batch" -> avgLen,
-      ).foreach { case (t, df) => store.write(t, df, SaveMode.Overwrite) }
+      ).map { case (t, df) =>
+        t -> (() => store.write(t, df, SaveMode.Overwrite)) })
     } finally { clean.unpersist(); () }
+  }
+
+  /** Fills the cache of `cached` with one job: the job AQE's table cache
+    * stage runs for the first plan that scans an unloaded cache. Run
+    * before a fan-out, it keeps each concurrent plan from finding the
+    * cache unloaded and submitting that job again. */
+  private def loadCache(cached: DataFrame): Unit =
+    cached.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation if !r.cacheBuilder.isCachedColumnBuffersLoaded =>
+        r.cacheBuilder.cachedColumnBuffers
+    }.foreach { rdd =>
+      cached.sparkSession.sparkContext.runJob(rdd, (_: Iterator[_]) => ())
+      ()
+    }
+
+  /** Runs every task at once, one new thread each, and returns when all
+    * have finished; then rethrows the first failure in task order (a
+    * fatal error before any other), the rest attached as suppressed.
+    * The threads are created per call so that each inherits the
+    * caller's SparkContext local properties (job group, scheduler
+    * pool, job description) and active session. */
+  private def inParallel(tasks: Seq[(String, () => Unit)]): Unit = {
+    val errors = new Array[Throwable](tasks.size)
+    val threads = tasks.zipWithIndex.map { case ((name, body), i) =>
+      val t = new Thread(() =>
+        try body() catch { case e: Throwable => errors(i) = e },
+        s"graft-batch-$name")
+      t.start()
+      t
+    }
+    // wait out an interrupt too: the caller's `finally` may free what
+    // the tasks still read
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    val failed = errors.filter(_ != null)
+    failed.find(e => !NonFatal(e)).orElse(failed.headOption).foreach { e =>
+      failed.filter(_ ne e).foreach(e.addSuppressed)
+      throw e
+    }
   }
 
   /** Right-to-be-forgotten cascade (GDPR art. 17 over a lake): scrub

@@ -14,7 +14,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * making `graft_cosine(a, b)` available to SQL and `expr()` in every
   * session — the proper production wiring; `CosineSim.register` is the
-  * ad-hoc per-session alternative.
+  * ad-hoc per-session alternative. It also installs the optimizer rules
+  * [[graft.plans.TopKRewrite]] and [[CaseMapRewrite]] (`lower`/`upper`
+  * → the native `graft_lower`/`graft_upper`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions.{checkArity, foldableInt}
@@ -162,6 +164,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
+    ext.injectOptimizerRule(_ => CaseMapRewrite)
   }
 }
 

@@ -38,6 +38,15 @@ object ColumnShim {
       : org.apache.spark.sql.catalyst.analysis.FunctionRegistry =
     ext.registerFunctions(registry)
 
+  /** The optimizer rules a SparkSessionExtensions injects, built for
+    * `spark` — lets specs install them on the shared session through
+    * `spark.experimental` (`buildOptimizerRules` is private[sql]). */
+  def optimizerRules(ext: org.apache.spark.sql.SparkSessionExtensions,
+      spark: org.apache.spark.sql.SparkSession)
+      : Seq[org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
+    ext.buildOptimizerRules(spark)
+
   /** DataFrame over an InternalRow RDD, optionally flagged streaming —
     * what a V1 streaming `Source.getBatch` must return
     * (`internalCreateDataFrame` is private[sql]). */

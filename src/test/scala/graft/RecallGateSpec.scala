@@ -8,7 +8,9 @@ import graft.ops.{DedupOps, VectorOps}
   * tables — not just planted pairs. Thresholds sit under the measured
   * values with margin (measured at sf0.01: MinHash 1.0, SimHash 0.60,
   * LSH-KNN 0.11) so they catch regressions in the sketch machinery
-  * (hash derivation, banding, probing), not data noise.
+  * (hash derivation, banding, probing), not data noise. The corpus
+  * property behind the exact-match MinHash oracles is checked at both
+  * scale factors the strict gate runs (sf0.01 and sf0.001).
   */
 class RecallGateSpec extends SparkSpec {
 
@@ -44,6 +46,23 @@ class RecallGateSpec extends SparkSpec {
       "oracles. This is a testdata/parameter change, not an engine " +
       "bug — rederive the oracle precondition before trusting those " +
       "gates.")
+  }
+
+  test("corpus property at sf0.001: every exact J>=0.5 pair sits at " +
+      "J>=8/9 (minhash/fuzzy_contamination oracle precondition)") {
+    // The same precondition for the sf0.001 run of the strict gate. Its
+    // lowest >=0.5 pair is J = 8/9 (0.8889 in the 4-place `jaccard`
+    // column), where a pair misses all 8 bands of 4 with
+    // p = (1-(8/9)^4)^8 <= 4.0e-4 — twice sf0.01's 2.0e-4 at J >= 0.9
+    // (asserted above, unrelaxed).
+    val js = DedupOps.ngramJaccardPairs(Tables.documents(spark, sf0), 0.5)
+      .select("jaccard").collect().map(_.getDouble(0))
+    assert(js.nonEmpty, "no exact >=0.5 pairs at sf0.001 — the " +
+      "minhash oracle would be vacuous")
+    assert(js.min >= 0.8889, s"corpus property violated at sf0.001: a " +
+      s"J=${js.min} pair under 8/9 raises the band-miss bound behind " +
+      "the minhash_near_dups / fuzzy_contamination exact-equality " +
+      "oracles. This is a testdata/parameter change, not an engine bug.")
   }
 
   test("MinHash+LSH banding recalls >= 90% of exact jaccard-0.5 pairs") {
