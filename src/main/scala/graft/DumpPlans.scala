@@ -14,8 +14,35 @@ import org.apache.spark.sql.SparkSession
   * modulo AQE's runtime re-optimization, which `explain` cannot show
   * before execution (the initial plan still carries join strategies,
   * Exchange placement, and PushedFilters).
+  *
+  * Each file is [[normalize]]d, so two runs of one commit write the same
+  * bytes and a before/after diff shows only plan changes — except for
+  * the `Expand` group order (gid numbering) of the distinct aggregates
+  * in `simhash_invariants`, `table_profile_approx_audit`,
+  * `table_profile_events` and `type_dow_mutual_info`, which Spark
+  * picks differently between runs.
   */
 object DumpPlans {
+
+  /** Per-file renumbering of the ids a plan string takes from JVM-wide
+    * counters — expression ids (`doc_id#345L`), plan ids
+    * (`[plan_id=22790]`) and RDD ids (`MapPartitionsRDD[911]`) — in
+    * order of first appearance, and a fixed token for JVM lambda class
+    * names and addresses (`$$Lambda/0x…@1a2b3c`). */
+  def normalize(plan: String): String = {
+    def renumber(s: String, re: scala.util.matching.Regex,
+        put: Int => String): String = {
+      val seen = scala.collection.mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(
+        put(seen.getOrElseUpdate(m.group(1), seen.size + 1))))
+    }
+    val exprIds = renumber(plan, """(?<=[\w)\]`])#(\d+)""".r, i => s"#$i")
+    val planIds = renumber(exprIds, """plan_id=(\d+)""".r, i => s"plan_id=$i")
+    val rddIds = renumber(planIds, """(?<=RDD)\[(\d+)\]""".r, i => s"[$i]")
+    """\$\$Lambda[^\s,)\]]*""".r.replaceAllIn(rddIds,
+      scala.util.matching.Regex.quoteReplacement("$$Lambda<fn>"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/plans")
@@ -52,7 +79,7 @@ object DumpPlans {
               org.apache.spark.sql.execution.FormattedMode)
           java.nio.file.Files.write(
             java.nio.file.Paths.get(outDir, s"$name.txt"),
-            txt.getBytes("UTF-8"))
+            normalize(txt).getBytes("UTF-8"))
         } catch {
           // NonFatal only (ADVICE r17): swallowing OOM/interrupts here
           // would produce a silently incomplete plan set that later

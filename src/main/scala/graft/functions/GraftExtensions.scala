@@ -83,6 +83,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           foldableInt(usage, "w", exprs(2)))
       }))
     ext.injectFunction((
+      FunctionIdentifier("graft_shingle_hashes"),
+      new ExpressionInfo(classOf[ShingleHashes].getName,
+        "graft_shingle_hashes"),
+      (exprs: Seq[Expression]) => {
+        val usage = "graft_shingle_hashes(tokens, k)"
+        checkArity("graft_shingle_hashes", usage, exprs, 2)
+        val k = foldableInt(usage, "k", exprs(1))
+        if (k < 1) throw new IllegalArgumentException(
+          s"$usage: k must be >= 1, got $k")
+        ShingleHashes(exprs(0), k)
+      }))
+    ext.injectFunction((
       FunctionIdentifier("graft_normalize"),
       new ExpressionInfo(classOf[UnicodeNormalize].getName,
         "graft_normalize"),

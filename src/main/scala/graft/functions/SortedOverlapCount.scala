@@ -27,7 +27,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * rounded score is bit-identical (spec-gated in DedupOpsSpec).
   *
   * Contract: inputs must be duplicate-free and ascending-sorted (both
-  * guaranteed by `sort_array(collect_set(...))`); null ELEMENT → null
+  * guaranteed by `graft_shingle_hashes` and by
+  * `sort_array(collect_set(...))`); null ELEMENT → null
   * (cannot occur after collect_set, which drops nulls — the guard
   * mirrors [[HammingDist]]'s); null input → null (nullIntolerant).
   */

@@ -63,6 +63,30 @@ object DedupOps {
       .otherwise(array().cast("array<string>"))
   }
 
+  /** A document's k-shingle set as the sorted distinct `xxhash64`
+    * array the near-dup verify steps intersect — one native
+    * [[graft.functions.ShingleHashes]] call over [[tokens]], equal to
+    * `sort_array(collect_set(xxhash64(sh)))` over [[shingleRows]]. */
+  def shingleSet(text: Column, k: Int): Column =
+    graft.functions.ShingleHashes.shingleHashes(tokens(text), k)
+
+  /** Exact-Jaccard verification of candidate pairs (a_id, b_id) against
+    * per-doc shingle sets (doc_id, hs): the native `graft_overlap`
+    * merge-scan per pair gives |A∩B|, |A∪B| = |A| + |B| − |A∩B|, and
+    * the pair is kept when its 4-place score reaches `threshold`. */
+  private def verifyPairs(cands: DataFrame, sets: DataFrame,
+      threshold: Double): DataFrame =
+    cands
+      .join(sets.select(col("doc_id").as("a_id"), col("hs").as("hs_a")), "a_id")
+      .join(sets.select(col("doc_id").as("b_id"), col("hs").as("hs_b")), "b_id")
+      .withColumn("shared",
+        graft.functions.SortedOverlapCount.overlapFused(
+          col("hs_a"), col("hs_b")))
+      .withColumn("jaccard", round(col("shared").cast("double") /
+        (size(col("hs_a")) + size(col("hs_b")) - col("shared")), 4))
+      .filter(col("jaccard") >= threshold)
+      .select("a_id", "b_id", "jaccard")
+
   /** (doc_id, shingle) inverted-index rows — the single place shingling
     * is computed; everything downstream aggregates/joins these rows.
     *
@@ -281,66 +305,60 @@ object DedupOps {
     * prefix-only index (half the posting rows at t=0.5, and skewed
     * toward the RAREST shingles — the ordering exists precisely so
     * hot shingles land in suffixes), a size band |B| ≥ t·|A| prunes
-    * inside the candidate join, and each candidate pair is verified
-    * with its exact intersection over the FULL index. No cap, no
-    * soundness precondition — exact at any df distribution.
+    * inside the candidate join, and PPJoin's positional filter drops
+    * every pair that cannot reach the required overlap
+    * ⌈t/(1+t)·(|A|+|B|)⌉: shared prefix shingles are shared in the same
+    * global order, so the c of them a pair shares up to its LAST
+    * shared prefix shingle (at ranks ia, ib) bound the overlap by
+    * c + min(|A| − ia, |B| − ib). Each surviving pair is verified
+    * with its exact intersection. No cap, no soundness precondition —
+    * exact at any df distribution.
     *
-    * Plan shape: the posting frame is checkpointed once and feeds the
-    * df agg, the prefix ranking (one window sorted by doc), both
-    * candidate-join sides, and the verify joins; the verify is two
-    * hash joins keyed on doc_id against the candidate pair list,
-    * linear in candidate count. */
+    * Effective threshold: a pair is emitted when its 4-place ROUNDED
+    * score reaches `threshold`, so every bound above uses the smallest
+    * J that rounds up to it, t′ = (T − ½)/10⁴ with T = ⌈10⁴·threshold⌉
+    * (t − 0.5e-4 on the 4-place grid), and compares exact integers:
+    * t′ = tNum/20000 multiplies out of every inequality.
+    *
+    * Plan shape: pure — building the frame starts no job. `sets` is
+    * one narrow projection (doc_id, hs, n) of the documents through the
+    * native [[graft.functions.ShingleHashes]] kernel (no interpreted
+    * shingling, no collect_set pass); the postings are `explode(hs)`,
+    * the df aggregate joins back and one window (sorted by doc) ranks
+    * each doc's postings; the prefix self-join is an equi-join on the
+    * hash whose per-pair grouping (count, max ranks) replaces a
+    * distinct and applies the positional filter; the verify is two
+    * doc_id-keyed joins of the candidates straight to `sets` and the
+    * native `graft_overlap` merge-scan per pair. */
   def jaccardPrefixPairs(docs: DataFrame, threshold: Double = 0.5,
       k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val inv = shingleRows(docs, k)
-      .select(col("doc_id"), xxhash64(col("sh")).as("h"))
-      .localCheckpoint()
-    val dfCounts = inv.groupBy("h").agg(count(lit(1)).as("df"))
-    val wDoc = Window.partitionBy("doc_id")
-    val wRank = wDoc.orderBy(col("df").asc, col("h").asc)
-    val ranked = inv.join(dfCounts, "h")
-      .select(col("doc_id"), col("h"),
-        row_number().over(wRank).cast("long").as("r"),
-        count(lit(1)).over(wDoc).as("n"))
-    val prefix = ranked
-      .filter(col("r") <= col("n") - ceil(lit(threshold) * col("n")) + 1)
-      .select(col("doc_id"), col("h"), col("n"))
+    val tDen = 20000L
+    val tNum = 2L * math.ceil(threshold * 10000 - 1e-6).toLong - 1
+    val sets = docs.filter(col("doc_id").isNotNull)
+      .select(col("doc_id"), shingleSet(col("text"), k).as("hs"))
+      .select(col("doc_id"), col("hs"), size(col("hs")).as("n"))
+    val post = sets.select(col("doc_id"), col("n"), explode(col("hs")).as("h"))
+    val dfCounts = post.groupBy("h").agg(count(lit(1)).as("df"))
+    val wRank = Window.partitionBy("doc_id").orderBy(col("df").asc, col("h").asc)
+    // rank r is in the prefix iff ⌈t′·n⌉ ≤ n − r + 1
+    val prefix = post.join(dfCounts, "h")
+      .select(col("doc_id"), col("h"), col("n"),
+        row_number().over(wRank).cast("long").as("r"))
+      .filter(lit(tNum) * col("n") <= lit(tDen) * (col("n") - col("r") + 1))
     val cands = prefix.as("a")
       .join(prefix.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id") &&
-          col("b.n").cast("double") >= lit(threshold) * col("a.n") &&
-          col("a.n").cast("double") >= lit(threshold) * col("b.n"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
+          lit(tDen) * col("b.n") >= lit(tNum) * col("a.n") &&
+          lit(tDen) * col("a.n") >= lit(tNum) * col("b.n"))
+      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
         col("a.n").as("n_a"), col("b.n").as("n_b"))
-      .distinct()
-      .localCheckpoint() // candIds + the two set joins read it
-    // Verification rewritten (r18): the two full-inverted-index joins +
-    // per-pair re-aggregation shuffled |cands|·|doc| intersection rows
-    // and sort-merge-joined them on (b_id, h) — profiled as the
-    // query's dominant stage (9.6 CPU-s on 3 AQE-coalesced tasks).
-    // Now: candidate-bounded SORTED hash sets (one collect per doc,
-    // the minhashNearDups posture) + the native graft_overlap
-    // merge-scan per pair. shared = |A∩B| is the same integer the join
-    // form counted, and n_a/n_b are carried from the prefix stage, so
-    // the rounded score divides identical integers.
-    val candIds = cands.select(col("a_id").as("doc_id"))
-      .unionByName(cands.select(col("b_id").as("doc_id")))
-      .distinct()
-    val sets = inv.join(candIds, Seq("doc_id"), "left_semi")
-      .groupBy("doc_id")
-      .agg(sort_array(collect_set(col("h"))).as("hs"))
-    cands
-      .join(sets.select(col("doc_id").as("a_id"), col("hs").as("hs_a")), "a_id")
-      .join(sets.select(col("doc_id").as("b_id"), col("hs").as("hs_b")), "b_id")
-      .withColumn("shared",
-        graft.functions.SortedOverlapCount.overlapFused(
-          col("hs_a"), col("hs_b")))
-      .withColumn("jaccard",
-        round(col("shared").cast("double") /
-          (col("n_a") + col("n_b") - col("shared")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
+      .agg(count(lit(1)).as("c"), max(col("a.r")).as("ia"),
+        max(col("b.r")).as("ib"))
+      // c + min(n_a − ia, n_b − ib) ≥ t′/(1+t′)·(n_a + n_b)
+      .filter((col("c") + least(col("n_a") - col("ia"), col("n_b") - col("ib"))) *
+        lit(tDen + tNum) >= lit(tNum) * (col("n_a") + col("n_b")))
+    verifyPairs(cands, sets, threshold)
   }
 
   /** Cross-source copy matrix — "which sources copy from which":
@@ -499,48 +517,25 @@ object DedupOps {
 
   /** Full MinHash near-dup pipeline: LSH candidates, then exact Jaccard
     * verification on just the candidate pairs, via hashed shingle sets
-    * (collect_set over the inverted index — long arrays, not strings).
+    * ([[shingleSet]] — sorted long arrays, not strings).
     *
-    * The verification sets are CANDIDATE-BOUNDED: the inverted index is
+    * The verification sets are CANDIDATE-BOUNDED: the documents are
     * left-semi joined against the distinct candidate ids before the
-    * `collect_set`, so the heavy set aggregation is O(candidate docs),
-    * not O(corpus) — at 100 TB candidates are a tiny fraction of the
-    * corpus and the pruned doc→set map stays broadcast-sized. The ids
-    * come from the band stage (any doc in a bucket of size ≥ 2 is in
-    * some pair), NOT from the pair join, so the semi-join build side is
-    * ready one stage earlier and the shared band subtree is
-    * materialized once via exchange reuse (asserted in DedupOpsSpec).
-    *
-    * Measured cost of the pruning at sf0.1: ~0.7 s (1.0 → 1.7 s),
-    * because set-building previously OVERLAPPED the candidate pipeline
-    * (both branch off `shingleRows`) and now must wait for the
-    * candidate ids. That latency is bounded by one small-corpus set
-    * aggregation; the alternative — corpus-wide `collect_set` — grows
-    * linearly with data and is the path that dies first at 100 TB. */
+    * per-doc set projection, so set building is O(candidate docs), not
+    * O(corpus). The ids come from the band stage (any doc in a bucket
+    * of size ≥ 2 is in some pair), NOT from the pair join, so the
+    * semi-join build side is ready one stage earlier and the shared
+    * band subtree is materialized once via exchange reuse (asserted in
+    * DedupOpsSpec). */
   def minhashNearDups(docs: DataFrame, threshold: Double = 0.5,
       numHashes: Int = 32, bands: Int = 8, k: Int = 3): DataFrame = {
     val capped = cappedBands(docs, numHashes, bands, k, maxBucket = 500)
     val cands = candidatePairs(capped)
     val candIds = capped.filter(col("bsz") >= 2)
       .select("doc_id").distinct()
-    // sets SORTED once per doc; the per-pair verify is then one
-    // allocation-free merge-scan (graft_overlap) instead of two hash
-    // sets + two result arrays per pair — |A∪B| = |A|+|B|−|A∩B|, so
-    // the rounded score divides the same exact integers (r18)
-    val sets = shingleRows(docs, k)
-      .join(candIds, Seq("doc_id"), "left_semi")
-      .groupBy("doc_id")
-      .agg(sort_array(collect_set(xxhash64(col("sh")))).as("hs"))
-    cands
-      .join(sets.select(col("doc_id").as("a_id"), col("hs").as("hs_a")), "a_id")
-      .join(sets.select(col("doc_id").as("b_id"), col("hs").as("hs_b")), "b_id")
-      .withColumn("shared",
-        graft.functions.SortedOverlapCount.overlapFused(
-          col("hs_a"), col("hs_b")))
-      .withColumn("jaccard", round(col("shared").cast("double") /
-        (size(col("hs_a")) + size(col("hs_b")) - col("shared")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
+    val sets = docs.join(candIds, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), shingleSet(col("text"), k).as("hs"))
+    verifyPairs(cands, sets, threshold)
   }
 
   /** Incremental near-dup maintenance — the continual-ingestion shape
@@ -588,21 +583,9 @@ object DedupOps {
     val candIds = cands.select(col("a_id").as("doc_id"))
       .unionByName(cands.select(col("b_id").as("doc_id")))
       .distinct()
-    // sorted sets + merge-scan overlap — see [[minhashNearDups]] (r18)
-    val sets = shingleRows(all, k)
-      .join(candIds, Seq("doc_id"), "left_semi")
-      .groupBy("doc_id")
-      .agg(sort_array(collect_set(xxhash64(col("sh")))).as("hs"))
-    cands
-      .join(sets.select(col("doc_id").as("a_id"), col("hs").as("hs_a")), "a_id")
-      .join(sets.select(col("doc_id").as("b_id"), col("hs").as("hs_b")), "b_id")
-      .withColumn("shared",
-        graft.functions.SortedOverlapCount.overlapFused(
-          col("hs_a"), col("hs_b")))
-      .withColumn("jaccard", round(col("shared").cast("double") /
-        (size(col("hs_a")) + size(col("hs_b")) - col("shared")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
+    val sets = all.join(candIds, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), shingleSet(col("text"), k).as("hs"))
+    verifyPairs(cands, sets, threshold)
   }
 
   /** [[incrementalNearDups]] with the banded signature INDEX as the
@@ -726,20 +709,9 @@ object DedupOps {
       .join(candIds, Seq("doc_id"), "left_semi")
       .unionByName(newDocs.select(col("doc_id"), col("text"))
         .join(candIds, Seq("doc_id"), "left_semi"))
-    // sorted sets + merge-scan overlap — see [[minhashNearDups]] (r18)
-    val sets = shingleRows(candTexts, k)
-      .groupBy("doc_id")
-      .agg(sort_array(collect_set(xxhash64(col("sh")))).as("hs"))
-    cands
-      .join(sets.select(col("doc_id").as("a_id"), col("hs").as("hs_a")), "a_id")
-      .join(sets.select(col("doc_id").as("b_id"), col("hs").as("hs_b")), "b_id")
-      .withColumn("shared",
-        graft.functions.SortedOverlapCount.overlapFused(
-          col("hs_a"), col("hs_b")))
-      .withColumn("jaccard", round(col("shared").cast("double") /
-        (size(col("hs_a")) + size(col("hs_b")) - col("shared")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
+    val sets = candTexts
+      .select(col("doc_id"), shingleSet(col("text"), k).as("hs"))
+    verifyPairs(cands, sets, threshold)
   }
 
   // ---------- SimHash ----------

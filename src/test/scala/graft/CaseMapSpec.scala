@@ -46,16 +46,6 @@ class CaseMapSpec extends SparkSpec {
   private def graftUpper(c: Column): Column =
     ColumnShim.column(CaseMap(ColumnShim.expression(c), toUpper = true))
 
-  private def withConfs[T](kv: (String, String)*)(f: => T): T = {
-    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** The optimizer rules of `GraftExtensions`, on the shared session. */
   private def withGraftRules[T](f: => T): T = {
     val ext = new org.apache.spark.sql.SparkSessionExtensions

@@ -129,6 +129,21 @@ class DedupOpsSpec extends SparkSpec {
     assert(exact.contains((10L, 11L)), s"prefix filter lost the pair: $exact")
   }
 
+  test("jaccardPrefixPairs keeps a pair whose score only ROUNDS up to t") {
+    // doc 2's 5,000 shingles are all in doc 1's 10,001: J = 5000/10001
+    // = 0.49995…, published as 0.5 ≥ t. Bounds derived from t itself
+    // (size band 5000 ≥ 0.5·10001) drop the pair before verification;
+    // they must use the smallest J that rounds up to t.
+    def words(n: Int) = (0 until n).map(i => s"w$i").mkString(" ")
+    val corpus = Seq((1L, words(10003)), (2L, words(5002)))
+      .toDF("doc_id", "text")
+    val want = Set((1L, 2L, 0.5))
+    assert(DedupOps.ngramJaccardPairs(corpus, 0.5)
+      .as[(Long, Long, Double)].collect().toSet == want)
+    assert(DedupOps.jaccardPrefixPairs(corpus, 0.5)
+      .as[(Long, Long, Double)].collect().toSet == want)
+  }
+
   test("ngramContainmentPairs flags the verbatim quote Jaccard misses") {
     // doc 1 is a verbatim substring of doc 0: every one of its
     // shingles appears in doc 0, so containment = 1.0 — but the union

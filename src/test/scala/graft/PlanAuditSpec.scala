@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops._
@@ -131,13 +133,13 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("minhash_near_dups: verification sets are candidate-bounded") {
-    // the collect_set build must sit behind a LEFT SEMI prune against
+    // the shingle-set build must sit behind a LEFT SEMI prune against
     // the candidate ids — the corpus-wide set build is the path that
     // dies first at 100 TB (DedupOps.minhashNearDups docstring)
     val plan = planOf(DedupOps.minhashNearDups(
       Tables.documents(spark, sf0), 0.5))
     assert(plan.contains("LeftSemi"), s"candidate semi-join missing:\n$plan")
-    assert(plan.contains("collect_set"), plan)
+    assert(plan.contains("graft_shingle_hashes("), plan)
   }
 
   test("slow_orders_by_priority: EXISTS plans as one semi join") {
@@ -368,8 +370,31 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("jaccardPrefixPairs: every join is an equi-join (no nested loop)") {
-    val plan = planOf(graft.ops.DedupOps.jaccardPrefixPairs(
-      Tables.documents(spark, sf0), 0.5))
+    // and the frame is pure: building it starts no job, no checkpointed
+    // ExistingRDD leaf hides a subtree, and the native shingle-set kernel
+    // shows in explain
+    val docs = Tables.documents(spark, sf0)
+    val sc = spark.sparkContext
+    ListenerDrain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    val df = try DedupOps.jaccardPrefixPairs(docs, 0.5)
+      finally { ListenerDrain(sc); sc.removeSparkListener(listener) }
+    assert(jobs.get == 0, "building the DataFrame started a job")
+    val leaves = df.queryExecution.optimizedPlan.collectLeaves()
+      .map(_.nodeName)
+    assert(!leaves.exists(n => n == "LogicalRDD" || n.contains("ExistingRDD")),
+      leaves)
+    val explained = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExtendedMode)
+    assert(explained.contains("graft_shingle_hashes("), explained)
+    assert(!explained.contains("ExistingRDD"), explained)
+    val plan = planOf(df)
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
