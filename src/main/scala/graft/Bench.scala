@@ -72,27 +72,9 @@ object Bench {
     // that emits `"value":1,21`, invalid JSON. Pin ROOT once.
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      // native functions + TopKPerGroup strategy + row_number rewrite
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // dailyMovingAvg's global window over the ≤1-row-per-day series is
-    // documented-safe (EventOps.dailyMovingAvg scaladoc) but WindowExec
-    // warns on every run — quiet exactly that logger so the bench
-    // stderr tail stays free of scary-but-explained noise. Catalyst
-    // strips foldable partition keys, so a lit(0) partitionBy cannot
-    // silence it at the source.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.start()
 
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Double = {
@@ -120,7 +102,7 @@ object Bench {
       def once(): Double = {
         val t0 = System.nanoTime()
         // pmod keeps the ANSI-mode sum far from Long overflow
-        spark.range(0L, 2000000000L, 1L, cpus.toInt)
+        spark.range(0L, 2000000000L, 1L, cpus)
           .select(sum(pmod(xxhash64(col("id")), lit(1000000L)))).collect()
         (System.nanoTime() - t0) / 1e9
       }
@@ -334,7 +316,7 @@ object Bench {
       spark.catalog.clearCache()
       System.gc()
       Thread.sleep(1500)
-      spark.range(0L, 2000000000L, 1L, cpus.toInt)
+      spark.range(0L, 2000000000L, 1L, cpus)
         .select(org.apache.spark.sql.functions.sum(
           org.apache.spark.sql.functions.pmod(
             org.apache.spark.sql.functions.xxhash64(

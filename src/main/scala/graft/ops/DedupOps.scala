@@ -338,7 +338,12 @@ object DedupOps {
     val sets = docs.filter(col("doc_id").isNotNull)
       .select(col("doc_id"), shingleSet(col("text"), k).as("hs"))
       .select(col("doc_id"), col("hs"), size(col("hs")).as("n"))
-    val post = sets.select(col("doc_id"), col("n"), explode(col("hs")).as("h"))
+    // explode_outer + an explicit non-null filter, not explode: Spark
+    // infers size(hs) > 0 from an inner explode and pushes it below the
+    // projection of hs, which runs the kernel twice per document. The
+    // hashes are never null, so only the empty-set rows drop out.
+    val post = sets.select(col("doc_id"), col("n"), explode_outer(col("hs")).as("h"))
+      .filter(col("h").isNotNull)
     val dfCounts = post.groupBy("h").agg(count(lit(1)).as("df"))
     val wRank = Window.partitionBy("doc_id").orderBy(col("df").asc, col("h").asc)
     // rank r is in the prefix iff ⌈t′·n⌉ ≤ n − r + 1

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job/per-stage wall-clock profiler for one or more SparkEntry
   * queries — the empirical side of guide §1 ("decide whether the time
@@ -10,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   *
   *   sbt "runMain graft.tools.Profile ips_policy_value[,more]"
   *
-  * Runs each query twice (warm-up + measured) with Bench's exact
-  * session config and prints, for the measured run: every job's
+  * Runs each query twice (warm-up + measured) on Bench's session
+  * ([[graft.GraftSession]]) and prints, for the measured run: every job's
   * wall-clock and stage list, plus every stage's task-time sum, input
   * bytes/records and shuffle bytes. Job count × scheduling latency is
   * the hidden cost this exposes — a "tiny stats" query that runs 15
@@ -22,16 +21,7 @@ object Profile {
     val names = args.headOption.getOrElse("").split(",").map(_.trim)
       .filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.start()
 
     case class JobRec(id: Int, start: Long, var end: Long = 0L,
       var stages: Seq[Int] = Nil)

@@ -111,26 +111,18 @@ class OracleLintSpec extends AnyFunSuite {
       case (pos, enclosing, _) if !enclosing.contains("cast") => pos
     }
 
-  test("no registry key is declared twice in the SparkEntry source " +
-      "(a duplicate silently SHADOWS the earlier query in the Map)") {
-    // The r15 lesson: a second "pmi_collocations" registration
-    // replaced the original adjacent-bigram query without any error —
-    // Map construction keeps the last binding. The runtime Maps can't
-    // reveal this (the collision has already collapsed), so lint the
-    // source text of each map region.
-    val src = scala.io.Source.fromFile(
-      "src/main/scala/graft/SparkEntry.scala")("UTF-8").mkString
-    val qStart = src.indexOf("def queries")
-    val oStart = src.indexOf("def oracleSql")
-    val key = """"([a-z0-9_]+)" ->""".r
-    def dups(region: String): Seq[String] =
-      key.findAllMatchIn(region).map(_.group(1)).toSeq
-        .groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }
-        .toSeq.sorted
-    val qd = dups(src.substring(qStart, oStart))
-    val od = dups(src.substring(oStart))
-    assert(qd.isEmpty, s"duplicate queries keys (later shadows earlier): $qd")
-    assert(od.isEmpty, s"duplicate oracleSql keys: $od")
+  test("registry names are distinct; a repeated name throws") {
+    // The r15 lesson: a second "pmi_collocations" Map entry replaced
+    // the original query without any error — a Map literal keeps the
+    // last binding. The registry is a Seq of records whose names are
+    // checked when it is built; the canary proves that check fires.
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct.size == names.size)
+    assert(SparkEntry.queries.keySet == names.toSet)
+    val r = SparkEntry.registry.head
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.registryOf(Seq(r, new SparkEntry.Query(r.name, r.build, None))))
+    assert(e.getMessage.contains(r.name), e.getMessage)
   }
 
   test("every oracle sum( is CAST/round-disciplined or explicitly double") {
@@ -224,7 +216,8 @@ class OracleLintSpec extends AnyFunSuite {
       // hash-gated theorem row
       "kll_value_quantiles" -> "kll_rank_bound_audit",
     )
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    val rowsOnly =
+      SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name).toSet
     assert(rowsOnly == pairedGate.keySet,
       s"rows-only drift: unexpected=${rowsOnly -- pairedGate.keySet} " +
         s"missing=${pairedGate.keySet -- rowsOnly}")

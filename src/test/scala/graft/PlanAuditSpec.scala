@@ -399,6 +399,23 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
+  test("jaccardPrefixPairs: one shingle kernel per posting branch") {
+    // an inner explode(hs) lets Spark infer size(hs) > 0 and push it
+    // below the projection of hs, evaluating the kernel twice per doc
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    val df = DedupOps.jaccardPrefixPairs(Tables.documents(spark, sf0), 0.5)
+    val postings = df.queryExecution.optimizedPlan.collect {
+      case g: Generate => g
+    }
+    assert(postings.nonEmpty)
+    for (g <- postings) {
+      val kernels = g.child.flatMap(_.expressions.flatMap(_.collect {
+        case k: graft.functions.ShingleHashes => k
+      }))
+      assert(kernels.size == 1, g.treeString)
+    }
+  }
+
   test("timeDecayEngagement: one broadcast anchor, no windows") {
     val plan = planOf(EventOps.timeDecayEngagement(Tables.events(spark, sf0)))
     assert(!plan.contains("Window"), plan)
