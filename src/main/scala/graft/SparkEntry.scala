@@ -206,13 +206,24 @@ object SparkEntry {
       " FROM dtv a JOIN dtv b ON a.doc_id = b.doc_id AND a.term < b.term " +
       "GROUP BY 1, 2 HAVING count(*) >= 10)"
 
+  /** The midpoint of the events' time range `lo`..`hi` in epoch
+    * microseconds: half 1 of a two-halves split ends at it. */
+  private final val midUs = "CAST((lo + hi) // 2 AS BIGINT)"
+
+  /** A user's tenure `t` in days over `f`..`l` (first and last event
+    * day) and whether the user `observed`ly churned (`l` before the
+    * data's last day `max_day`). */
+  private final val tenureDur =
+    "CAST(datediff('day', f, l) + 1 AS BIGINT) AS t, " +
+      "CASE WHEN l < max_day THEN 1 ELSE 0 END AS observed"
+
   /** Shared oracle CTEs of the two-halves drift tests: `h(key, half)`
     * splits the events at the midpoint of their time range (half 1 up
     * to it, half 2 after), `keySql` selecting the compared `key`. */
   private def halvesCtes(keySql: String, key: String): String =
     s"b AS (SELECT $keySql, epoch_us(ts) AS us FROM events), " +
       "m AS (SELECT min(us) AS lo, max(us) AS hi FROM b), " +
-      s"h AS (SELECT $key, CASE WHEN us <= CAST((lo + hi) // 2 AS BIGINT) " +
+      s"h AS (SELECT $key, CASE WHEN us <= $midUs " +
       "THEN 1 ELSE 2 END AS half FROM b CROSS JOIN m)"
 
   /** [[halvesCtes]] over the whole-unit value bins, with the per-bin
@@ -231,8 +242,7 @@ object SparkEntry {
     "u AS (SELECT user_id, CAST(min(ts) AS DATE) AS f, " +
       "CAST(max(ts) AS DATE) AS l FROM events GROUP BY 1), " +
       "mx AS (SELECT CAST(max(ts) AS DATE) AS max_day FROM events), " +
-      "dur AS (SELECT CAST(datediff('day', f, l) + 1 AS BIGINT) AS t, " +
-      "CASE WHEN l < max_day THEN 1 ELSE 0 END AS observed " +
+      s"dur AS (SELECT $tenureDur " +
       "FROM u CROSS JOIN mx), " +
       "byt AS (SELECT t, CAST(count(*) AS BIGINT) AS ending, " +
       "CAST(sum(observed) AS BIGINT) AS d FROM dur GROUP BY 1), " +
@@ -317,8 +327,7 @@ object SparkEntry {
       "FROM events GROUP BY 1, 2), " +
       "md AS (SELECT CAST(date_trunc('day', max(ts)) AS DATE) AS max_day " +
       "FROM events), " +
-      "dur AS (SELECT CAST(datediff('day', f, l) + 1 AS BIGINT) AS t, " +
-      "CASE WHEN l < max_day THEN 1 ELSE 0 END AS observed, arm " +
+      s"dur AS (SELECT $tenureDur, arm " +
       "FROM u CROSS JOIN md), " +
       "byt AS (SELECT t, CAST(count(*) AS BIGINT) AS ending, " +
       "CAST(sum(observed) AS BIGINT) AS d, " +
@@ -1291,7 +1300,7 @@ object SparkEntry {
         "lead(epoch_us(ts), 1) OVER (PARTITION BY user_id " +
         "ORDER BY ts ASC, event_id ASC) AS next_us FROM events), " +
         "pairs AS MATERIALIZED (SELECT pr.*, " +
-        "CAST((lo + hi) // 2 AS BIGINT) AS mid FROM pr CROSS JOIN b " +
+        s"$midUs AS mid FROM pr CROSS JOIN b " +
         "WHERE next_type IS NOT NULL), " +
         "train AS MATERIALIZED (SELECT event_type, next_type, " +
         "CAST(count(*) AS BIGINT) AS c FROM pairs " +
@@ -3496,10 +3505,10 @@ object SparkEntry {
       "WITH b AS (SELECT min(epoch_us(ts)) AS lo, " +
         "max(epoch_us(ts)) AS hi FROM events), " +
         "pu AS (SELECT user_id, " +
-        "CAST(sum(CASE WHEN epoch_us(ts) > CAST((lo + hi) // 2 AS BIGINT) " +
+        s"CAST(sum(CASE WHEN epoch_us(ts) > $midUs " +
         "THEN CAST(value AS DECIMAL(12,2)) " +
         "ELSE CAST(0 AS DECIMAL(12,2)) END) * 100 AS BIGINT) AS post_c, " +
-        "CAST(sum(CASE WHEN epoch_us(ts) <= CAST((lo + hi) // 2 AS BIGINT) " +
+        s"CAST(sum(CASE WHEN epoch_us(ts) <= $midUs " +
         "THEN CAST(value AS DECIMAL(12,2)) " +
         "ELSE CAST(0 AS DECIMAL(12,2)) END) * 100 AS BIGINT) AS pre_c " +
         "FROM events CROSS JOIN b GROUP BY 1), " +
@@ -3643,7 +3652,7 @@ object SparkEntry {
         "epoch_us(ts) AS us FROM events), " +
         "mid AS (SELECT min(us) AS lo, max(us) AS hi FROM b), " +
         "half AS (SELECT bin, " +
-        "CASE WHEN us <= CAST((lo + hi) // 2 AS BIGINT) " +
+        s"CASE WHEN us <= $midUs " +
         "THEN 1 ELSE 2 END AS half FROM b CROSS JOIN mid), " +
         "counts AS (SELECT bin, " +
         "CAST(sum(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1, " +
@@ -4442,7 +4451,7 @@ object SparkEntry {
         "FROM events), " +
         "h AS (SELECT coalesce(CAST(CAST(value AS DECIMAL(12,2)) * 100 " +
         "AS BIGINT), 0) AS c, " +
-        "CASE WHEN epoch_us(ts) <= CAST((lo + hi) // 2 AS BIGINT) " +
+        s"CASE WHEN epoch_us(ts) <= $midUs " +
         "THEN 1 ELSE 2 END AS half FROM events CROSS JOIN b), " +
         "m AS (SELECT " +
         "CAST(sum(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1, " +
@@ -4739,10 +4748,10 @@ object SparkEntry {
       "WITH m0 AS (SELECT min(epoch_us(ts)) AS lo, max(epoch_us(ts)) AS hi " +
         "FROM events), " +
         "pu AS (SELECT user_id, " +
-        "CAST(sum(CASE WHEN epoch_us(ts) <= CAST((lo + hi) // 2 AS BIGINT) " +
+        s"CAST(sum(CASE WHEN epoch_us(ts) <= $midUs " +
         "THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) ELSE 0 END) " +
         "AS BIGINT) AS x, " +
-        "CAST(sum(CASE WHEN epoch_us(ts) > CAST((lo + hi) // 2 AS BIGINT) " +
+        s"CAST(sum(CASE WHEN epoch_us(ts) > $midUs " +
         "THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) ELSE 0 END) " +
         "AS BIGINT) AS y, user_id % 2 AS arm " +
         "FROM events CROSS JOIN m0 GROUP BY user_id), " +
@@ -4832,10 +4841,10 @@ object SparkEntry {
       "WITH m0 AS (SELECT min(epoch_us(ts)) AS lo, max(epoch_us(ts)) " +
         "AS hi FROM events), " +
         "pu AS (SELECT user_id, " +
-        "CAST(sum(CASE WHEN epoch_us(ts) <= CAST((lo + hi) // 2 AS BIGINT) " +
+        s"CAST(sum(CASE WHEN epoch_us(ts) <= $midUs " +
         "THEN CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) ELSE 0 END) " +
         "AS BIGINT) AS score, " +
-        "max(CASE WHEN epoch_us(ts) > CAST((lo + hi) // 2 AS BIGINT) " +
+        s"max(CASE WHEN epoch_us(ts) > $midUs " +
         "AND event_type = 'purchase' AND value >= 90.0 THEN 1 ELSE 0 END) " +
         "AS conv FROM events CROSS JOIN m0 GROUP BY user_id), " +
         "t AS (SELECT ntile(10) OVER (ORDER BY score DESC, user_id ASC) " +
@@ -5045,9 +5054,9 @@ object SparkEntry {
       "WITH b AS (SELECT min(epoch_us(ts)) AS lo, max(epoch_us(ts)) AS hi " +
         "FROM events), " +
         "pu AS (SELECT user_id, " +
-        "max(CASE WHEN event_type = 'purchase' AND epoch_us(ts) <= CAST((lo + hi) // 2 AS BIGINT) " +
+        s"max(CASE WHEN event_type = 'purchase' AND epoch_us(ts) <= $midUs " +
         "THEN 1 ELSE 0 END) AS pre, " +
-        "max(CASE WHEN event_type = 'purchase' AND epoch_us(ts) > CAST((lo + hi) // 2 AS BIGINT) " +
+        s"max(CASE WHEN event_type = 'purchase' AND epoch_us(ts) > $midUs " +
         "THEN 1 ELSE 0 END) AS post " +
         "FROM events CROSS JOIN b GROUP BY 1), " +
         "c AS (SELECT CAST(count(*) AS BIGINT) AS n_users, " +
@@ -5068,9 +5077,9 @@ object SparkEntry {
       "WITH b AS (SELECT min(epoch_us(ts)) AS lo, max(epoch_us(ts)) AS hi " +
         "FROM events), " +
         "pu AS (SELECT user_id, user_id % 2 AS arm, " +
-        "max(CASE WHEN event_type = 'purchase' AND epoch_us(ts) <= CAST((lo + hi) // 2 AS BIGINT) " +
+        s"max(CASE WHEN event_type = 'purchase' AND epoch_us(ts) <= $midUs " +
         "THEN 1 ELSE 0 END) AS pre, " +
-        "max(CASE WHEN event_type = 'purchase' AND epoch_us(ts) > CAST((lo + hi) // 2 AS BIGINT) " +
+        s"max(CASE WHEN event_type = 'purchase' AND epoch_us(ts) > $midUs " +
         "THEN 1 ELSE 0 END) AS post " +
         "FROM events CROSS JOIN b GROUP BY 1, 2), " +
         "c AS (SELECT " +
@@ -5351,10 +5360,10 @@ object SparkEntry {
       "WITH b AS (SELECT min(epoch_us(ts)) AS lo, max(epoch_us(ts)) AS hi " +
         "FROM events), " +
         "pu AS (SELECT user_id, user_id % 2 AS arm, " +
-        "CAST(sum(CASE WHEN epoch_us(ts) <= CAST((lo + hi) // 2 AS BIGINT) " +
+        s"CAST(sum(CASE WHEN epoch_us(ts) <= $midUs " +
         "THEN 1 ELSE 0 END) AS BIGINT) AS x, " +
         "max(CASE WHEN event_type = 'purchase' AND " +
-        "epoch_us(ts) > CAST((lo + hi) // 2 AS BIGINT) THEN 1 ELSE 0 END) AS y " +
+        s"epoch_us(ts) > $midUs THEN 1 ELSE 0 END) AS y " +
         "FROM events CROSS JOIN b GROUP BY 1, 2), " +
         "t AS (SELECT *, CAST(ntile(5) OVER (ORDER BY x ASC, user_id ASC) " +
         "AS BIGINT) AS stratum FROM pu), " +
@@ -5738,8 +5747,7 @@ object SparkEntry {
         "CAST(max(CASE WHEN event_type = 'purchase' THEN ts END) " +
         "AS DATE) AS pd FROM events GROUP BY 1), " +
         "mx AS (SELECT CAST(max(ts) AS DATE) AS max_day FROM events), " +
-        "dur AS (SELECT CAST(datediff('day', f, l) + 1 AS BIGINT) AS t, " +
-        "CASE WHEN l < max_day THEN 1 ELSE 0 END AS observed, " +
+        s"dur AS (SELECT $tenureDur, " +
         "CASE WHEN pd IS NOT NULL AND pd = l THEN 1 ELSE 0 END " +
         "AS conv_exit FROM u CROSS JOIN mx), " +
         "byt AS (SELECT t, CAST(count(*) AS BIGINT) AS ending, " +
@@ -5815,7 +5823,7 @@ object SparkEntry {
       "WITH b AS (SELECT min(epoch_us(ts)) AS lo, " +
         "max(epoch_us(ts)) AS hi FROM events), " +
         "cells AS (SELECT user_id % 2 AS arm, " +
-        "CASE WHEN epoch_us(ts) <= CAST((lo + hi) // 2 AS BIGINT) " +
+        s"CASE WHEN epoch_us(ts) <= $midUs " +
         "THEN 1 ELSE 2 END AS half, " +
         "CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS c " +
         "FROM events CROSS JOIN b), " +
@@ -5901,10 +5909,10 @@ object SparkEntry {
       "WITH b AS (SELECT min(epoch_us(ts)) AS lo, " +
         "max(epoch_us(ts)) AS hi FROM events), " +
         "per AS (SELECT user_id, " +
-        "CAST(max(CASE WHEN epoch_us(ts) <= CAST((lo + hi) // 2 " +
-        "AS BIGINT) THEN 1 ELSE 0 END) AS BIGINT) AS in1, " +
-        "CAST(max(CASE WHEN epoch_us(ts) > CAST((lo + hi) // 2 " +
-        "AS BIGINT) THEN 1 ELSE 0 END) AS BIGINT) AS in2 " +
+        s"CAST(max(CASE WHEN epoch_us(ts) <= $midUs " +
+        "THEN 1 ELSE 0 END) AS BIGINT) AS in1, " +
+        s"CAST(max(CASE WHEN epoch_us(ts) > $midUs " +
+        "THEN 1 ELSE 0 END) AS BIGINT) AS in2 " +
         "FROM events CROSS JOIN b GROUP BY 1), " +
         "s AS (SELECT CAST(sum(in1) AS BIGINT) AS n1, " +
         "CAST(sum(in2) AS BIGINT) AS n2, " +
@@ -6030,8 +6038,7 @@ object SparkEntry {
       "WITH u AS (SELECT user_id, CAST(min(ts) AS DATE) AS f, " +
         "CAST(max(ts) AS DATE) AS l FROM events GROUP BY 1), " +
         "mx AS (SELECT CAST(max(ts) AS DATE) AS max_day FROM events), " +
-        "dur AS (SELECT CAST(datediff('day', f, l) + 1 AS BIGINT) AS t, " +
-        "CASE WHEN l < max_day THEN 1 ELSE 0 END AS observed, " +
+        s"dur AS (SELECT $tenureDur, " +
         "user_id % 2 AS arm FROM u CROSS JOIN mx), " +
         "byt AS (SELECT t, CAST(count(*) AS BIGINT) AS ending, " +
         "CAST(sum(observed) AS BIGINT) AS d, " +

@@ -491,22 +491,7 @@ object EventOps {
     *
     * Emits per pair: n1, n2, `u2_a` (2·U_a, exact) and the z. */
   def mannWhitneyTypePairs(events: DataFrame): DataFrame = {
-    val cnts = events.groupBy(col("value").as("v"),
-      col("event_type").as("t")).agg(count(lit(1)).as("c"))
-    val types = cnts.select("t").distinct()
-    val pairs = types.as("x").join(types.as("y"),
-        col("x.t") < col("y.t"))
-      .select(col("x.t").as("ta"), col("y.t").as("tb"))
-    val combined = cnts.join(broadcast(pairs),
-        col("t") === col("ta") || col("t") === col("tb"))
-      .groupBy("ta", "tb", "v")
-      .agg(sum(when(col("t") === col("ta"), col("c")).otherwise(0L)).as("ca"),
-        sum(when(col("t") === col("tb"), col("c")).otherwise(0L)).as("cb"))
-    val w = Window.partitionBy("ta", "tb").orderBy(col("v").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val cum = combined
-      .withColumn("cum_a", coalesce(sum(col("ca")).over(w), lit(0L)))
-      .withColumn("cum_b", coalesce(sum(col("cb")).over(w), lit(0L)))
+    val cum = typePairValueGrid(events)
     val nPair = col("ca") + col("cb")
     val stats = cum.groupBy("ta", "tb").agg(
       sum(col("ca")).as("n1"), sum(col("cb")).as("n2"),
@@ -540,9 +525,7 @@ object EventOps {
     * never data-proportional; the daily collapse in front is the one
     * corpus-sized aggregation. */
   def theilSenTrendByType(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily, "event_type")
+    val grid = typeDailyGrid(events)
       .select(col("event_type"),
         datediff(col("day"), lit("1970-01-01").cast("date")).cast("long")
           .as("x"),
@@ -570,9 +553,7 @@ object EventOps {
     * over the dense zero-filled calendar; the rank windows partition
     * per type over calendar-bounded frames. */
   def spearmanTypePairs(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
+    val grid = typeDailyGrid(events).select("event_type", "day", "cnt")
     val wr = Window.partitionBy("event_type").orderBy(col("cnt").asc)
     val wt = Window.partitionBy("event_type", "cnt")
     val ranked = grid.select(col("event_type"), col("day"),
@@ -663,9 +644,8 @@ object EventOps {
     * Shape: one (type, day) hash agg collapses the log; the grid,
     * rank prefix and moments all run on calendar×types rows. */
   def kruskalWallisDailyCounts(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("v"))
-    val grid = dailyGrid(daily, "event_type").select("event_type", "v")
+    val grid = typeDailyGrid(events)
+      .select(col("event_type"), col("cnt").as("v"))
     val byVal = grid.groupBy(col("v"), col("event_type"))
       .agg(count(lit(1)).as("c"))
     val tot = byVal.groupBy("v").agg(sum("c").as("ct"))
@@ -714,9 +694,7 @@ object EventOps {
     * data-proportional (the [[theilSenTrendByType]] argument); the
     * daily collapse in front is the one corpus-sized aggregation. */
   def kendallTauTypePairs(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
+    val grid = typeDailyGrid(events).select("event_type", "day", "cnt")
     val p = grid.as("a").join(grid.as("b"),
         col("a.day") === col("b.day") &&
           col("a.event_type") < col("b.event_type"))
@@ -786,9 +764,7 @@ object EventOps {
   }
 
   def typeCountCorrelations(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
+    val grid = typeDailyGrid(events).select("event_type", "day", "cnt")
     val m = grid.as("a")
       .join(grid.as("b"),
         col("a.day") === col("b.day") &&
@@ -836,9 +812,7 @@ object EventOps {
     * the SHIFTED day key (an equi-join like acfDailyCounts, never a
     * theta join), one |types|²-row aggregate. */
   def grangerTypePairs(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
+    val grid = typeDailyGrid(events).select("event_type", "day", "cnt")
       .localCheckpoint() // three self-references below
     val yf = grid.select(col("event_type").as("ta"), col("day"),
       col("cnt").as("y"))
@@ -904,9 +878,7 @@ object EventOps {
     * Shape: one corpus-sized daily collapse; everything after runs on
     * the calendar frame. */
   def durbinWatsonDaily(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily)
+    val grid = dailyCountGrid(events)
       .select(
         datediff(col("day"), lit("1970-01-01").cast("date")).cast("long")
           .as("x"),
@@ -972,9 +944,7 @@ object EventOps {
     * lineage stays visible to the sweep, the isotonicCalibration
     * convention). */
   def runsTestDaily(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
+    val grid = dailyCountGrid(events).select(col("day"), col("cnt").as("y"))
     val ranked = grid.withColumn("rn",
       row_number().over(Window.orderBy(col("y").asc, col("day").asc))
         .cast("long"))
@@ -1028,22 +998,7 @@ object EventOps {
     * Shape: one corpus collapse to the 2dp value grid; windows order
     * the per-pair collapsed grid only. */
   def cliffsDeltaTypePairs(events: DataFrame): DataFrame = {
-    val cnts = events.groupBy(col("value").as("v"),
-      col("event_type").as("t")).agg(count(lit(1)).as("c"))
-    val types = cnts.select("t").distinct()
-    val pairs = types.as("x").join(types.as("y"),
-        col("x.t") < col("y.t"))
-      .select(col("x.t").as("ta"), col("y.t").as("tb"))
-    val combined = cnts.join(broadcast(pairs),
-        col("t") === col("ta") || col("t") === col("tb"))
-      .groupBy("ta", "tb", "v")
-      .agg(sum(when(col("t") === col("ta"), col("c")).otherwise(0L)).as("ca"),
-        sum(when(col("t") === col("tb"), col("c")).otherwise(0L)).as("cb"))
-    val w = Window.partitionBy("ta", "tb").orderBy(col("v").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val cum = combined
-      .withColumn("cum_a", coalesce(sum(col("ca")).over(w), lit(0L)))
-      .withColumn("cum_b", coalesce(sum(col("cb")).over(w), lit(0L)))
+    val cum = typePairValueGrid(events)
     def d38(c: Column) = c.cast("decimal(38,0)")
     val stats = cum.groupBy("ta", "tb").agg(
       sum(col("ca")).as("n1"), sum(col("cb")).as("n2"),
@@ -1085,9 +1040,7 @@ object EventOps {
     * Shape: one corpus-sized daily collapse; the within-week rank is
     * a 7×7-per-week self-join on the calendar frame. */
   def friedmanDowTest(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily)
+    val grid = dailyCountGrid(events)
       .select(
         (datediff(col("day"), lit("1970-01-01").cast("date")).cast("long") +
           lit(3L)).as("dd3"),
@@ -1447,10 +1400,7 @@ object EventOps {
     * T²) until one double division; the burstiness flag is an integer
     * cross-multiplication at 1.5. */
   def fanoFactorByType(events: DataFrame): DataFrame = {
-    val mins = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
+    val mins = withTimeRange(events)
       .select(col("event_type"),
         expr("(unix_micros(ts) - lo) div 60000000").as("minute"),
         expr("(hi - lo) div 60000000 + 1").as("m"))
@@ -1482,16 +1432,7 @@ object EventOps {
     * micro-units before the one order-dependent sum. Shape: the same
     * bounded value-range grid as KS/W1. */
   def valuePsiDrift(events: DataFrame): DataFrame = {
-    val half = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
-      .select(floor(col("value")).cast("long").as("bin"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"), 1)
-          .otherwise(2).as("half"))
-    val counts = half.groupBy("bin")
-      .agg(sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("half") === 2, 1L).otherwise(0L)).as("c2"))
+    val counts = binHalves(events)
     val tot = counts.agg(sum("c1").as("n1"), sum("c2").as("n2"),
       count(lit(1)).as("nb"))
     val p = (col("c1") + lit(1L)).cast("double") /
@@ -2854,9 +2795,7 @@ object EventOps {
     * theta join. */
   def acfDailyCounts(events: DataFrame, maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1, s"maxLag >= 1: $maxLag")
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily).select("day", "cnt")
+    val grid = dailyCountGrid(events).select("day", "cnt")
     val lags = events.sparkSession.range(1, maxLag + 1)
       .select(col("id").cast("int").as("lag"))
     val shifted = grid.crossJoin(broadcast(lags))
@@ -2903,9 +2842,7 @@ object EventOps {
     * recursion run on a single calendar-length array row. */
   def pacfDailyCounts(events: DataFrame, maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1, s"maxLag >= 1: $maxLag")
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val series = dailyGrid(daily)
+    val series = dailyCountGrid(events)
       .select(col("day"), col("cnt").cast("double").as("y"))
       .agg(array_sort(collect_list(struct(col("day"), col("y")))).as("sd"))
       .select(transform(col("sd"), x => x.getField("y")).as("ys"))
@@ -2979,20 +2916,7 @@ object EventOps {
     * cardinality. */
   def kmSurvivalHorizons(events: DataFrame,
       horizons: Seq[Int] = Seq(1, 7, 14, 30)): DataFrame = {
-    val users = events.groupBy("user_id")
-      .agg(to_date(min(col("ts"))).as("f"), to_date(max(col("ts"))).as("l"))
-    val maxDay = events.agg(to_date(max(col("ts"))).as("max_day"))
-    val dur = users.crossJoin(broadcast(maxDay))
-      .select((datediff(col("l"), col("f")) + 1).cast("long").as("t"),
-        when(col("l") < col("max_day"), 1L).otherwise(0L).as("observed"))
-    val byT = dur.groupBy("t")
-      .agg(count(lit(1)).as("ending"), sum("observed").as("d"))
-    val total = dur.agg(count(lit(1)).as("n_users"))
-    val wPrior = Window.orderBy(col("t").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val atRisk = byT.crossJoin(broadcast(total))
-      .withColumn("n",
-        col("n_users") - sum(col("ending")).over(wPrior) + col("ending"))
+    val atRisk = tenureRisk(events)
     val hs = events.sparkSession.createDataFrame(
       horizons.map(Tuple1(_))).toDF("horizon")
     val curve = atRisk.filter(col("d") > 0L)
@@ -3027,20 +2951,7 @@ object EventOps {
     * SE/CI, stated. */
   def kmGreenwoodCi(events: DataFrame,
       horizons: Seq[Int] = Seq(1, 7, 14, 30)): DataFrame = {
-    val users = events.groupBy("user_id")
-      .agg(to_date(min(col("ts"))).as("f"), to_date(max(col("ts"))).as("l"))
-    val maxDay = events.agg(to_date(max(col("ts"))).as("max_day"))
-    val dur = users.crossJoin(broadcast(maxDay))
-      .select((datediff(col("l"), col("f")) + 1).cast("long").as("t"),
-        when(col("l") < col("max_day"), 1L).otherwise(0L).as("observed"))
-    val byT = dur.groupBy("t")
-      .agg(count(lit(1)).as("ending"), sum("observed").as("d"))
-    val total = dur.agg(count(lit(1)).as("n_users"))
-    val wPrior = Window.orderBy(col("t").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val atRisk = byT.crossJoin(broadcast(total))
-      .withColumn("n",
-        col("n_users") - sum(col("ending")).over(wPrior) + col("ending"))
+    val atRisk = tenureRisk(events)
     val hs = events.sparkSession.createDataFrame(
       horizons.map(Tuple1(_))).toDF("horizon")
     val lnTerm = round(log((col("n") - col("d")).cast("double") /
@@ -3118,20 +3029,7 @@ object EventOps {
     * end. Horizons with no observed churn report Ĥ = 0, survival 1. */
   def nelsonAalenHorizons(events: DataFrame,
       horizons: Seq[Int] = Seq(1, 7, 14, 30)): DataFrame = {
-    val u = events.groupBy("user_id")
-      .agg(to_date(min(col("ts"))).as("f"), to_date(max(col("ts"))).as("l"))
-    val mx = events.agg(to_date(max(col("ts"))).as("max_day"))
-    val dur = u.crossJoin(broadcast(mx))
-      .select((datediff(col("l"), col("f")) + 1).cast("long").as("t"),
-        when(col("l") < col("max_day"), 1L).otherwise(0L).as("observed"))
-    val byT = dur.groupBy("t")
-      .agg(count(lit(1)).as("ending"), sum("observed").as("d"))
-    val total = dur.agg(count(lit(1)).as("n_users"))
-    val wPrior = Window.orderBy(col("t").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val atRisk = byT.crossJoin(broadcast(total))
-      .withColumn("n",
-        col("n_users") - sum(col("ending")).over(wPrior) + col("ending"))
+    val atRisk = tenureRisk(events)
     val hs = events.sparkSession.createDataFrame(
       horizons.map(Tuple1(_))).toDF("horizon")
     val curve = atRisk.filter(col("d") > 0L)
@@ -3409,20 +3307,9 @@ object EventOps {
     * the same collapsed ≤calendar frame the KM query's window does. */
   def rmstHorizons(events: DataFrame,
       horizons: Seq[Int] = Seq(7, 14, 30)): DataFrame = {
-    val users = events.groupBy("user_id")
-      .agg(to_date(min(col("ts"))).as("f"), to_date(max(col("ts"))).as("l"))
-    val maxDay = events.agg(to_date(max(col("ts"))).as("max_day"))
-    val dur = users.crossJoin(broadcast(maxDay))
-      .select((datediff(col("l"), col("f")) + 1).cast("long").as("t"),
-        when(col("l") < col("max_day"), 1L).otherwise(0L).as("observed"))
-    val byT = dur.groupBy("t")
-      .agg(count(lit(1)).as("ending"), sum("observed").as("d"))
-    val total = dur.agg(count(lit(1)).as("n_users"))
+    val atRisk = tenureRisk(events)
     val wPrior = Window.orderBy(col("t").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val atRisk = byT.crossJoin(broadcast(total))
-      .withColumn("n",
-        col("n_users") - sum(col("ending")).over(wPrior) + col("ending"))
     val wLead = Window.orderBy(col("t").asc)
     val ev = atRisk.filter(col("d") > 0L)
       .withColumn("cum", sum(log(
@@ -3462,20 +3349,7 @@ object EventOps {
     * much survives). Same exact-BIGINT risk-set windowing and
     * censoring rules; the rate is one pinned division. */
   def hazardByTenure(events: DataFrame): DataFrame = {
-    val users = events.groupBy("user_id")
-      .agg(to_date(min(col("ts"))).as("f"), to_date(max(col("ts"))).as("l"))
-    val maxDay = events.agg(to_date(max(col("ts"))).as("max_day"))
-    val dur = users.crossJoin(broadcast(maxDay))
-      .select((datediff(col("l"), col("f")) + 1).cast("long").as("t"),
-        when(col("l") < col("max_day"), 1L).otherwise(0L).as("observed"))
-    val byT = dur.groupBy("t")
-      .agg(count(lit(1)).as("ending"), sum("observed").as("d"))
-    val total = dur.agg(count(lit(1)).as("n_users"))
-    val wPrior = Window.orderBy(col("t").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    byT.crossJoin(broadcast(total))
-      .withColumn("n",
-        col("n_users") - sum(col("ending")).over(wPrior) + col("ending"))
+    tenureRisk(events)
       .filter(col("d") > 0L)
       .select(col("t").as("tenure_days"), col("n").as("n_at_risk"),
         col("d").as("n_churned"),
@@ -3619,14 +3493,7 @@ object EventOps {
     * Shape: one (type, half) hash agg over the scan; everything
     * after runs on ≤ 2·|types| rows. */
   def psiTypeDrift(events: DataFrame): DataFrame = {
-    val half = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
-      .select(col("event_type"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"), 1)
-          .otherwise(2).as("half"))
-    val counts = half.groupBy("event_type")
+    val counts = halves(events, col("event_type")).groupBy("event_type")
       .agg(sum(when(col("half") === 1, 1L).otherwise(0L)).as("n1"),
         sum(when(col("half") === 2, 1L).otherwise(0L)).as("n2"))
     val totals = counts.agg(sum("n1").as("t1"), sum("n2").as("t2"))
@@ -3657,31 +3524,20 @@ object EventOps {
     * Determinism: bin counts and cumulative counts are exact BIGINTs
     * (floor on a double is exact); the two ECDF shares are pinned
     * divisions; the argmax row is (gap DESC, bin ASC) — identical
-    * doubles row-for-row make the winner engine-identical. */
+    * doubles row-for-row make the winner engine-identical. An empty
+    * half → NULL ks_stat and at_bin. */
   def ksValueDrift(events: DataFrame): DataFrame = {
-    val half = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
-      .select(floor(col("value")).cast("long").as("bin"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"), 1)
-          .otherwise(2).as("half"))
-    val counts = half.groupBy("bin")
-      .agg(sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("half") === 2, 1L).otherwise(0L)).as("c2"))
-    val totals = counts.agg(sum("c1").as("n1"), sum("c2").as("n2"))
-    val w = Window.orderBy(col("bin").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    counts
-      .withColumn("cum1", sum(col("c1")).over(w))
-      .withColumn("cum2", sum(col("c2")).over(w))
-      .crossJoin(broadcast(totals))
+    val (ecdf, totals) = binHalvesEcdf(events)
+    ecdf.crossJoin(broadcast(totals))
       .select(col("bin"), col("n1"), col("n2"),
-        abs(col("cum1").cast("double") / col("n1").cast("double") -
-          col("cum2").cast("double") / col("n2").cast("double")).as("gap"))
+        when(col("n1") > 0L && col("n2") > 0L,
+          abs(col("cum1").cast("double") / col("n1").cast("double") -
+            col("cum2").cast("double") / col("n2").cast("double")))
+          .as("gap"))
       .orderBy(col("gap").desc, col("bin").asc).limit(1)
       .select(col("n1").as("n_first"), col("n2").as("n_second"),
-        round(col("gap"), 6).as("ks_stat"), col("bin").as("at_bin"))
+        round(col("gap"), 6).as("ks_stat"),
+        when(col("gap").isNotNull, col("bin")).as("at_bin"))
   }
 
   /** Polynomial-kernel maximum mean discrepancy between the time
@@ -3705,14 +3561,7 @@ object EventOps {
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val cents = (col("value").cast("decimal(12,2)") * lit(100))
       .cast("bigint")
-    val half = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
-      .select(coalesce(cents, lit(0L)).as("c"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"), 1)
-          .otherwise(2).as("half"))
-    val m = half.agg(
+    val m = halves(events, coalesce(cents, lit(0L)).as("c")).agg(
       sum(when(col("half") === 1, 1L).otherwise(0L)).as("n1"),
       sum(when(col("half") === 1, col("c"))).as("s1"),
       sum(when(col("half") === 1, dec(col("c")) * col("c"))).as("q1"),
@@ -3934,25 +3783,10 @@ object EventOps {
     * Shape: the [[ksValueDrift]] ECDF frame, bounded by the value
     * range. */
   def valueKuiperDrift(events: DataFrame): DataFrame = {
-    val half = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
-      .select(floor(col("value")).cast("long").as("bin"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"), 1)
-          .otherwise(2).as("half"))
-    val counts = half.groupBy("bin")
-      .agg(sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("half") === 2, 1L).otherwise(0L)).as("c2"))
-    val totals = counts.agg(sum("c1").as("n1"), sum("c2").as("n2"))
-    val w = Window.orderBy(col("bin").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val (ecdf, totals) = binHalvesEcdf(events)
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val g = dec(col("cum1")) * col("n2") - dec(col("cum2")) * col("n1")
-    val m = counts
-      .withColumn("cum1", sum(col("c1")).over(w))
-      .withColumn("cum2", sum(col("c2")).over(w))
-      .crossJoin(broadcast(totals))
+    val m = ecdf.crossJoin(broadcast(totals))
       .select(col("n1"), col("n2"), g.as("g"))
       .groupBy("n1", "n2")
       .agg(max(col("g")).as("gp"), max(-col("g")).as("gm"))
@@ -3979,27 +3813,13 @@ object EventOps {
     * Σ |cum₁·n₂ − cum₂·n₁|·gap — every factor an exact integer. The
     * products run in DECIMAL(38,0) (Spark) / HUGEINT (DuckDB), good
     * to ~10¹⁷ rows per half before precision loss; ONE double
-    * division at the end. Scale: the ECDF frame is bounded by the
-    * value RANGE (same argument as KS); both serial windows order
-    * that collapsed grid. */
+    * division at the end; an empty half → NULL. Scale: the ECDF frame
+    * is bounded by the value RANGE (same argument as KS); both serial
+    * windows order that collapsed grid. */
   def valueWassersteinDrift(events: DataFrame): DataFrame = {
-    val half = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
-      .select(floor(col("value")).cast("long").as("bin"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"), 1)
-          .otherwise(2).as("half"))
-    val counts = half.groupBy("bin")
-      .agg(sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("half") === 2, 1L).otherwise(0L)).as("c2"))
-    val totals = counts.agg(sum("c1").as("n1"), sum("c2").as("n2"))
-    val wCum = Window.orderBy(col("bin").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val (ecdf, totals) = binHalvesEcdf(events)
     val wLead = Window.orderBy(col("bin").asc)
-    val terms = counts
-      .withColumn("cum1", sum(col("c1")).over(wCum))
-      .withColumn("cum2", sum(col("c2")).over(wCum))
+    val terms = ecdf
       .withColumn("gap", lead(col("bin"), 1).over(wLead) - col("bin"))
       .filter(col("gap").isNotNull)
     terms.crossJoin(broadcast(totals))
@@ -4010,9 +3830,9 @@ object EventOps {
               col("n1").cast("decimal(19,0)")) *
           col("gap").cast("decimal(10,0)")).as("num"))
       .select(col("n_first"), col("n_second"),
-        round(col("num").cast("double") /
-          (col("n_first").cast("double") * col("n_second").cast("double")), 6)
-          .as("w1_distance"))
+        when(col("n_first") > 0L && col("n_second") > 0L,
+          round(col("num").cast("double") / (col("n_first").cast("double") *
+            col("n_second").cast("double")), 6)).as("w1_distance"))
   }
 
   /** Cochran–Armitage trend test: does the purchase-conversion rate
@@ -4085,9 +3905,7 @@ object EventOps {
     * data-proportional; the one corpus-sized stage is the daily
     * collapse. */
   def mannKendallDaily(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
+    val grid = dailyCountGrid(events).select(col("day"), col("cnt").as("y"))
       .localCheckpoint() // pair join + tie groups + count all read it
     val s = grid.as("a").join(grid.as("b"), col("a.day") < col("b.day"))
       .agg(sum(when(col("b.y") > col("a.y"), 1L)
@@ -4132,9 +3950,7 @@ object EventOps {
     * back, one aux reduce — nothing corpus-sized past the first agg. */
   def breuschPaganDaily(events: DataFrame): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val g = dailyGrid(daily)
+    val g = dailyCountGrid(events)
       .select((col("t") + lit(1L)).as("t"), col("cnt").as("y"))
       .localCheckpoint() // moment reduce + the residual pass read it
     val m = g.agg(count(lit(1)).as("n"), sum("t").as("sx"),
@@ -4193,9 +4009,7 @@ object EventOps {
     * 2-group collapse folded to a single row. */
   def chowBreakDaily(events: DataFrame): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val g = dailyGrid(daily)
+    val g = dailyCountGrid(events)
       .select((col("t") + lit(1L)).as("t"), col("cnt").as("y"))
       .localCheckpoint() // count probe + the segment collapse read it
     val nRow = g.agg(count(lit(1)).as("n"))
@@ -4429,6 +4243,7 @@ object EventOps {
   def markovNextEventAccuracy(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts").asc, col("event_id").asc)
+    // not withTimeRange: only the midpoint joins the windowed pairs
     val mid = events.agg(min(unix_micros(col("ts"))).as("lo"),
       max(unix_micros(col("ts"))).as("hi"))
       .select(expr("(lo + hi) div 2").as("mid"))
@@ -4560,9 +4375,7 @@ object EventOps {
     * windows only over collapsed calendar-bounded frames, a LIMIT 1
     * pick — nothing corpus-sized past the first agg. */
   def pettittChangepointDaily(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
+    val grid = dailyCountGrid(events).select(col("day"), col("cnt").as("y"))
       .localCheckpoint() // value groups + totals + the day join read it
     val wv = Window.orderBy(col("y").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -4669,28 +4482,14 @@ object EventOps {
     * numerators are exact DECIMAL(38,0)/HUGEINT sums ([[valueWassersteinDrift]]'s
     * discipline), combined in ONE pinned double chain, 6dp.
     *
-    * Scale: identical shape to the other drift lenses — one
-    * corpus-sized binned collapse, serial windows only over the
-    * bounded bin grid. */
+    * An empty half → NULL. Scale: identical shape to the other drift
+    * lenses — one corpus-sized binned collapse, serial windows only
+    * over the bounded bin grid. */
   def valueEnergyDrift(events: DataFrame): DataFrame = {
-    val half = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
-      .select(floor(col("value")).cast("long").as("bin"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"), 1)
-          .otherwise(2).as("half"))
-    val counts = half.groupBy("bin")
-      .agg(sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("half") === 2, 1L).otherwise(0L)).as("c2"))
-    val totals = counts.agg(sum("c1").as("n1"), sum("c2").as("n2"))
-    val wCum = Window.orderBy(col("bin").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val (ecdf, totals) = binHalvesEcdf(events)
     val wLead = Window.orderBy(col("bin").asc)
     def d19(c: Column) = c.cast("decimal(19,0)")
-    val terms = counts
-      .withColumn("cum1", sum(col("c1")).over(wCum))
-      .withColumn("cum2", sum(col("c2")).over(wCum))
+    val terms = ecdf
       .withColumn("gap", lead(col("bin"), 1).over(wLead) - col("bin"))
       .filter(col("gap").isNotNull)
     val sums = terms.crossJoin(broadcast(totals))
@@ -4705,9 +4504,10 @@ object EventOps {
     val n1d = col("n_first").cast("double")
     val n2d = col("n_second").cast("double")
     sums.select(col("n_first"), col("n_second"),
-      round(lit(2.0) * col("axy").cast("double") / (n1d * n2d) -
-        col("axx").cast("double") / (n1d * n1d) -
-        col("ayy").cast("double") / (n2d * n2d), 6).as("energy_dist"))
+      when(col("n_first") > 0L && col("n_second") > 0L,
+        round(lit(2.0) * col("axy").cast("double") / (n1d * n2d) -
+          col("axx").cast("double") / (n1d * n1d) -
+          col("ayy").cast("double") / (n2d * n2d), 6)).as("energy_dist"))
   }
 
   /** Cramér–von Mises drift of the binned `value` distribution
@@ -4726,33 +4526,20 @@ object EventOps {
     * integer instead would pass 10³⁸ at corpus scale — the pin IS the
     * headroom fix), and T is one pinned chain, 6dp.
     *
-    * Scale: identical to the other drift lenses — one corpus-sized
-    * binned collapse, serial windows only over the bounded bin grid. */
+    * An empty half → NULL T, false flag. Scale: identical to the other
+    * drift lenses — one corpus-sized binned collapse, serial windows
+    * only over the bounded bin grid. */
   def valueCvmDrift(events: DataFrame): DataFrame = {
-    val half = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
-      .select(floor(col("value")).cast("long").as("bin"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"), 1)
-          .otherwise(2).as("half"))
-    val counts = half.groupBy("bin")
-      .agg(sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("half") === 2, 1L).otherwise(0L)).as("c2"))
-    val totals = counts.agg(sum("c1").as("n1"), sum("c2").as("n2"))
-    val wCum = Window.orderBy(col("bin").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val (ecdf, totals) = binHalvesEcdf(events)
     def d19(c: Column) = c.cast("decimal(19,0)")
-    val terms = counts
-      .withColumn("cum1", sum(col("c1")).over(wCum))
-      .withColumn("cum2", sum(col("c2")).over(wCum))
-      .crossJoin(broadcast(totals))
+    val terms = ecdf.crossJoin(broadcast(totals))
     val n1d = col("n1").cast("double")
     val n2d = col("n2").cast("double")
     val f = (d19(col("cum1")) * col("n2") - d19(col("cum2")) * col("n1"))
       .cast("double") / (n1d * n2d)
-    val tm = round(f * f * (col("c1") + col("c2")).cast("double") *
-      lit(1000000.0), 0).cast("long")
+    val ok = col("n1") > 0L && col("n2") > 0L
+    val tm = when(ok, round(f * f * (col("c1") + col("c2")).cast("double") *
+      lit(1000000.0), 0).cast("long"))
     val s = terms.select(col("n1"), col("n2"), tm.as("tm"))
       .groupBy("n1", "n2")
       .agg(sum(col("tm").cast("decimal(38,0)")).as("sm"))
@@ -4760,9 +4547,8 @@ object EventOps {
     val t = n1d * n2d / (nD * nD) *
       (col("sm").cast("double") / lit(1000000.0))
     s.select(col("n1").as("n_first"), col("n2").as("n_second"),
-      round(t, 6).as("cvm_t"),
-      coalesce(when(col("n1") > 0L && col("n2") > 0L,
-        round(t, 6) > lit(0.461)), lit(false)).as("drifted"))
+      when(ok, round(t, 6)).as("cvm_t"),
+      coalesce(when(ok, round(t, 6) > lit(0.461)), lit(false)).as("drifted"))
   }
 
   /** Exact one-dimensional decision stump: the best `value` threshold
@@ -4835,9 +4621,7 @@ object EventOps {
     * the neighborhood join is calendar × (2w+1) — a constant of the
     * observation span, never data-proportional. */
   def rollingMedianDaily(events: DataFrame, window: Int = 3): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-    val grid = dailyGrid(daily).select("day", "n")
+    val grid = dailyCountGrid(events).select(col("day"), col("cnt").as("n"))
       .localCheckpoint()
     val med = grid.as("c").join(grid.as("o"),
         datediff(col("o.day"), col("c.day")).between(-window, window))
@@ -4867,9 +4651,7 @@ object EventOps {
     * type cardinality; one partitioned window pass computes both
     * lags. */
   def forecastBacktest(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
+    val grid = typeDailyGrid(events).select("event_type", "day", "cnt")
     val w = Window.partitionBy("event_type").orderBy(col("day").asc)
     grid
       .withColumn("l1", lag(col("cnt"), 1).over(w))
@@ -4938,21 +4720,17 @@ object EventOps {
     * integer in DECIMAL(38,0) (Spark) / HUGEINT (DuckDB) — good to
     * ~10¹⁸ cent²-units — and θ, the means, and both diffs are pinned
     * double arithmetic with one 6dp round each. Zero pre-period
-    * variance ⇒ NULL θ and adjusted columns, not a division error.
+    * variance ⇒ NULL θ and adjusted columns, and an empty arm ⇒ NULL
+    * mean for it and NULL diffs, not a division error.
     * Shape: per-user collapse → 1-row moment aggregate; the corpus is
     * touched once. */
   def cupedAdjustedAb(events: DataFrame): DataFrame = {
     val cents = (col("value").cast("decimal(12,2)") * lit(100))
       .cast("bigint")
-    val perUser = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
+    val perUser = withTimeRange(events)
       .select(col("user_id"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"), cents)
-          .otherwise(0L).as("xc"),
-        when(unix_micros(col("ts")) > expr("(lo + hi) div 2"), cents)
-          .otherwise(0L).as("yc"))
+        when(inFirstHalf, cents).otherwise(0L).as("xc"),
+        when(inSecondHalf, cents).otherwise(0L).as("yc"))
       .groupBy("user_id")
       .agg(sum("xc").as("x"), sum("yc").as("y"))
       .withColumn("arm", col("user_id") % lit(2L))
@@ -4977,12 +4755,14 @@ object EventOps {
       theta * (mean("sx_a", "n_a") - mean("sx", "n"))
     val adjB = mean("sy_b", "n_b") -
       theta * (mean("sx_b", "n_b") - mean("sx", "n"))
+    val ok = col("n_a") > 0L && col("n_b") > 0L
     m.select(col("n_a"), col("n_b"),
-      round(mean("sy_a", "n_a"), 6).as("mean_y_a"),
-      round(mean("sy_b", "n_b"), 6).as("mean_y_b"),
-      round(mean("sy_a", "n_a") - mean("sy_b", "n_b"), 6).as("raw_diff"),
+      when(col("n_a") > 0L, round(mean("sy_a", "n_a"), 6)).as("mean_y_a"),
+      when(col("n_b") > 0L, round(mean("sy_b", "n_b"), 6)).as("mean_y_b"),
+      when(ok, round(mean("sy_a", "n_a") - mean("sy_b", "n_b"), 6))
+        .as("raw_diff"),
       when(varX > 0L, round(theta, 6)).as("theta"),
-      when(varX > 0L, round(adjA - adjB, 6)).as("adj_diff"))
+      when(ok && varX > 0L, round(adjA - adjB, 6)).as("adj_diff"))
   }
 
   /** Welch's unequal-variance t-test on per-user total value between
@@ -4995,7 +4775,7 @@ object EventOps {
     * Σy² are exact (Σy² in DECIMAL(38,0)/HUGEINT); sample variances
     * use the integer closed form (n·Σy² − (Σy)²)/(n·(n−1)) and t/df
     * are pinned double chains, NULL when either variance is 0 or an
-    * arm has < 2 users. */
+    * arm has < 2 users; an empty arm's mean is NULL. */
   def welchTtestAb(events: DataFrame): DataFrame = {
     val cents = (col("value").cast("decimal(12,2)") * lit(100))
       .cast("bigint")
@@ -5029,10 +4809,10 @@ object EventOps {
         vb * vb / (col("n_b").cast("double") - 1.0))
     val ok = col("n_a") >= 2L && col("n_b") >= 2L
     m.select(col("n_a"), col("n_b"),
-      round(meanU("s_a", "n_a"), 6).as("mean_a"),
-      round(meanU("s_b", "n_b"), 6).as("mean_b"),
-      when(ok && va + vb > lit(0.0), round(t, 6)).as("t_stat"),
-      when(ok && va * va + vb * vb > lit(0.0), round(df, 6)).as("df"))
+      when(col("n_a") > 0L, round(meanU("s_a", "n_a"), 6)).as("mean_a"),
+      when(col("n_b") > 0L, round(meanU("s_b", "n_b"), 6)).as("mean_b"),
+      when(ok, when(va + vb > lit(0.0), round(t, 6))).as("t_stat"),
+      when(ok, when(va * va + vb * vb > lit(0.0), round(df, 6))).as("df"))
   }
 
   /** Model gains/lift table: users sorted by their PRE-period spend
@@ -5050,14 +4830,10 @@ object EventOps {
   def scoreGainsDeciles(events: DataFrame, threshold: Double = 90.0): DataFrame = {
     val cents = (col("value").cast("decimal(12,2)") * lit(100))
       .cast("bigint")
-    val perUser = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
+    val perUser = withTimeRange(events)
       .select(col("user_id"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"), cents)
-          .otherwise(0L).as("xc"),
-        when(unix_micros(col("ts")) > expr("(lo + hi) div 2") &&
+        when(inFirstHalf, cents).otherwise(0L).as("xc"),
+        when(inSecondHalf &&
           col("event_type") === "purchase" && col("value") >= threshold,
           1L).otherwise(0L).as("cv"))
       .groupBy("user_id")
@@ -5245,15 +5021,10 @@ object EventOps {
     * BIGINT micro-unit terms (the pinballLoss discipline). */
   def propensityStratifiedAte(events: DataFrame,
       strata: Int = 5): DataFrame = {
-    val perUser = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
+    val perUser = withTimeRange(events)
       .select(col("user_id"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"), 1L)
-          .otherwise(0L).as("pre"),
-        when(col("event_type") === "purchase" &&
-          unix_micros(col("ts")) > expr("(lo + hi) div 2"), 1L)
+        when(inFirstHalf, 1L).otherwise(0L).as("pre"),
+        when(col("event_type") === "purchase" && inSecondHalf, 1L)
           .otherwise(0L).as("conv"))
       .groupBy("user_id")
       .agg(sum(col("pre")).as("x"), max(col("conv")).as("y"))
@@ -5504,27 +5275,8 @@ object EventOps {
     * order-dependent sums (the pinballLoss discipline); Z is one
     * pinned chain, NULL when ΣV = 0 (no comparable risk sets). */
   def logrankTestAb(events: DataFrame): DataFrame = {
-    val users = events.groupBy("user_id")
-      .agg(to_date(min(col("ts"))).as("f"), to_date(max(col("ts"))).as("l"))
-    val maxDay = events.agg(to_date(max(col("ts"))).as("max_day"))
-    val dur = users.crossJoin(broadcast(maxDay))
-      .select((datediff(col("l"), col("f")) + 1).cast("long").as("t"),
-        when(col("l") < col("max_day"), 1L).otherwise(0L).as("observed"),
-        (col("user_id") % lit(2L)).as("arm"))
-    val byT = dur.groupBy("t").agg(
-      count(lit(1)).as("ending"), sum(col("observed")).as("d"),
-      sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("ending1"),
-      sum(when(col("arm") === 1L, col("observed")).otherwise(0L)).as("d1"))
-    val totals = dur.agg(count(lit(1)).as("n_users"),
-      sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("n_users1"))
-    val w = Window.orderBy(col("t").asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val atRisk = byT.crossJoin(broadcast(totals))
-      .withColumn("n",
-        col("n_users") - sum(col("ending")).over(w) + col("ending"))
-      .withColumn("n1",
-        col("n_users1") - sum(col("ending1")).over(w) + col("ending1"))
-      .filter(col("d") > 0L)
+    val (risk, totals) = armTenureRisk(events)
+    val atRisk = risk.filter(col("d") > 0L)
     val share = col("n1").cast("double") / col("n").cast("double")
     val eTerm = col("d").cast("double") * share
     val vTerm = when(col("n") > 1L,
@@ -5572,27 +5324,8 @@ object EventOps {
     * windows over the ≤|durations| frame, then 3 tiny broadcast-join
     * reduce rounds on that frame. */
   def coxPhAb(events: DataFrame): DataFrame = {
-    val users = events.groupBy("user_id")
-      .agg(to_date(min(col("ts"))).as("f"), to_date(max(col("ts"))).as("l"))
-    val maxDay = events.agg(to_date(max(col("ts"))).as("max_day"))
-    val dur = users.crossJoin(broadcast(maxDay))
-      .select((datediff(col("l"), col("f")) + 1).cast("long").as("t"),
-        when(col("l") < col("max_day"), 1L).otherwise(0L).as("observed"),
-        (col("user_id") % lit(2L)).as("arm"))
-    val byT = dur.groupBy("t").agg(
-      count(lit(1)).as("ending"), sum(col("observed")).as("d"),
-      sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("ending1"),
-      sum(when(col("arm") === 1L, col("observed")).otherwise(0L)).as("d1"))
-    val totals = dur.agg(count(lit(1)).as("n_users"),
-      sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("n_users1"))
-    val w = Window.orderBy(col("t").asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val atRisk = byT.crossJoin(broadcast(totals))
-      .withColumn("n",
-        col("n_users") - sum(col("ending")).over(w) + col("ending"))
-      .withColumn("n1",
-        col("n_users1") - sum(col("ending1")).over(w) + col("ending1"))
-      .filter(col("d") > 0L)
+    val (risk, totals) = armTenureRisk(events)
+    val atRisk = risk.filter(col("d") > 0L)
       .select(col("t"), col("d"), col("d1"),
         (col("n") - col("n1")).as("n0"), col("n1"))
       .localCheckpoint() // read by each of the 3 Newton rounds
@@ -5648,7 +5381,8 @@ object EventOps {
     * beside the drift monitors. One row: per-arm users/conversions/
     * rates, the pooled-variance z, and the |z| > 1.959964 two-sided
     * 5% flag. A saturated or empty outcome (pooled rate 0 or 1) has
-    * zero variance — NULL z, false flag — not a division error.
+    * zero variance — NULL z, false flag; an empty arm has a NULL rate,
+    * NULL z and a false flag. Neither is a division error.
     *
     * Determinism: all four cells are exact BIGINTs from one grouped
     * pass; rates and z are identically-ordered double arithmetic
@@ -5674,10 +5408,12 @@ object EventOps {
     val varTerm = pooled * (lit(1.0) - pooled) *
       (lit(1.0) / na + lit(1.0) / nb)
     val z = (rateA - rateB) / sqrt(varTerm)
+    val ok = col("n_a") > 0L && col("n_b") > 0L && varTerm > lit(0.0)
     cells.select(col("n_a"), col("conv_a"), col("n_b"), col("conv_b"),
-      round(rateA, 6).as("rate_a"), round(rateB, 6).as("rate_b"),
-      when(varTerm > lit(0.0), round(z, 6)).as("z_score"),
-      when(varTerm > lit(0.0), abs(z) > lit(1.959964)).otherwise(lit(false))
+      when(col("n_a") > 0L, round(rateA, 6)).as("rate_a"),
+      when(col("n_b") > 0L, round(rateB, 6)).as("rate_b"),
+      when(ok, round(z, 6)).as("z_score"),
+      when(ok, abs(z) > lit(1.959964)).otherwise(lit(false))
         .as("significant"))
   }
 
@@ -5818,9 +5554,8 @@ object EventOps {
     * Shape: one (type, day) hash agg collapses the log; medians, z
     * sums and moments all run on the calendar×types grid. */
   def brownForsytheDaily(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("v"))
-    val grid = dailyGrid(daily, "event_type").select("event_type", "v")
+    val grid = typeDailyGrid(events)
+      .select(col("event_type"), col("cnt").as("v"))
     val med2 = grid.groupBy("event_type")
       .agg(round(median(col("v")) * lit(2.0), 0).cast("long").as("m2"))
     val z = grid.join(broadcast(med2), "event_type")
@@ -5876,42 +5611,7 @@ object EventOps {
 
   private def fdrTypePairs(events: DataFrame, alpha: Double,
       harmonic: Boolean): DataFrame = {
-    val mw = mannWhitneyTypePairs(events)
-      .filter(col("z").isNotNull)
-      .select(col("type_a"), col("type_b"), col("z"))
-    // two-sided p through the native A&S 26.2.17 tail expression
-    // (graft.functions.NormalTail — codegen'd, chain-pinned to the
-    // oracle's parenthesization)
-    //
-    // RESIDUAL LIBM ASSUMPTION (ADVICE r14, documented not hidden):
-    // unlike sprtDailyAb, which pins its ln values as JVM double
-    // literals, the tail here re-evaluates exp(−z²/2) on BOTH rails —
-    // JVM Math.exp vs DuckDB's C exp. Everything downstream of the
-    // 6dp round is pinned double arithmetic on identical inputs, so
-    // the ONLY divergence point is a ≤1-ulp libm difference in exp
-    // landing EXACTLY on a 6dp rounding boundary (probability ~1e-10
-    // per pair; re-pinning to micro-units cannot remove it because
-    // the risk sits at the first rint itself, and pinning z as
-    // literals is impossible for data-dependent values). If the gate
-    // ever red-rows here with |got−exp| = 1e-6 on p/p_bh, this is why.
-    // the pairs frame is ≤ |types|²/2 rows but its lineage is the
-    // whole Mann–Whitney pipeline — materialize ONCE (the RankOps
-    // convention) so the three references below don't re-run it
-    val withP = mw.select(col("type_a"), col("type_b"), col("z"),
-      round(lit(2.0) *
-        graft.functions.NormalTail.normalTail(abs(col("z"))), 6).as("p"))
-      .localCheckpoint()
-    val m = withP.agg(count(lit(1)).as("m"))
-    // rank i = 1 + |pairs strictly before me in the (p, ta, tb) order|
-    val before = (col("a.p") < col("b.p")) ||
-      (col("a.p") === col("b.p") && (col("a.type_a") < col("b.type_a") ||
-        (col("a.type_a") === col("b.type_a") &&
-          col("a.type_b") < col("b.type_b"))))
-    val ranked = withP.as("b").join(broadcast(withP.as("a")), before, "left")
-      .groupBy(col("b.type_a").as("type_a"), col("b.type_b").as("type_b"),
-        col("b.z").as("z"), col("b.p").as("p"))
-      .agg((count(col("a.p")) + lit(1L)).as("rk"))
-      .crossJoin(broadcast(m))
+    val ranked = mwRankedPValues(events)
       .withColumn("q",
         if (!harmonic)
           round(least(col("p") * col("m").cast("double") /
@@ -5930,7 +5630,6 @@ object EventOps {
           round(least(col("p") * col("m").cast("double") * cm /
             col("rk").cast("double"), lit(1.0)), 6)
         })
-      .localCheckpoint()
     // step-up: adjusted p = min q over my suffix (rank ≥ mine)
     val adjName = if (harmonic) "p_by" else "p_bh"
     val adj = ranked.as("b")
@@ -5961,9 +5660,7 @@ object EventOps {
     * daily collapse, calendar-frame windows, a ≤7-row dow frame
     * broadcast back. */
   def seasonalDecompositionDaily(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-    val grid = dailyGrid(daily).select("day", "n")
+    val grid = dailyCountGrid(events).select(col("day"), col("cnt").as("n"))
     val w7 = Window.orderBy(col("day").asc).rowsBetween(-3, 3)
     val det = grid
       .withColumn("sum7", sum(col("n")).over(w7))
@@ -6021,10 +5718,8 @@ object EventOps {
     * single array row. The corpus-sized work is one (day) hash agg. */
   def holtWintersDaily(events: DataFrame, alpha: Double = 0.3,
       beta: Double = 0.1, gamma: Double = 0.2): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-    val series = dailyGrid(daily)
-      .select(col("day"), col("n").cast("double").as("y"))
+    val series = dailyCountGrid(events)
+      .select(col("day"), col("cnt").cast("double").as("y"))
       .agg(array_sort(collect_list(struct(col("day"), col("y")))).as("sd"))
       .select(transform(col("sd"), x => x.getField("y")).as("ys"))
       .filter(size(col("ys")) >= 14)
@@ -6083,9 +5778,7 @@ object EventOps {
     * OLS runs on a ≤4-point packed row. */
   def hurstExponentDaily(events: DataFrame,
       sizes: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
+    val grid = dailyCountGrid(events).select(col("day"), col("cnt").as("y"))
     // rank BEFORE the checkpoint so the serial window's collapse
     // lineage stays visible to the sweep (isotonic convention); the
     // checkpointed ranked frame then serves the count + 4 block scans
@@ -6167,9 +5860,7 @@ object EventOps {
     * fold. */
   def dfaAlphaDaily(events: DataFrame,
       sizes: Seq[Int] = Seq(4, 8, 16)): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
+    val grid = dailyCountGrid(events).select(col("day"), col("cnt").as("y"))
     // rank + global prefix BEFORE the checkpoint (the hurst/isotonic
     // sweep-visibility convention); the checkpointed frame then
     // serves the totals probe and |sizes| block scans
@@ -6251,9 +5942,7 @@ object EventOps {
     * bounded-serial case). */
   def conformalDailyIntervals(events: DataFrame,
       horizon: Int = 7): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
+    val grid = dailyCountGrid(events).select(col("day"), col("cnt").as("y"))
       .localCheckpoint() // residual shift + last-week probe share it
     val prev = grid.select(date_add(col("day"), 7).as("day"),
       col("y").as("y_prev"))
@@ -6303,10 +5992,8 @@ object EventOps {
     * single calendar-length array row. */
   def thetaForecastDaily(events: DataFrame, alpha: Double = 0.5,
       horizon: Int = 7): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-    val series = dailyGrid(daily)
-      .select(col("day"), col("n").cast("double").as("y"))
+    val series = dailyCountGrid(events)
+      .select(col("day"), col("cnt").cast("double").as("y"))
       .agg(array_sort(collect_list(struct(col("day"), col("y")))).as("sd"))
       .select(transform(col("sd"), x => x.getField("y")).as("ys"))
       .filter(size(col("ys")) >= 2)
@@ -6347,10 +6034,8 @@ object EventOps {
     * periodic series gives the model nothing to improve). */
   def holtWintersBacktest(events: DataFrame, alpha: Double = 0.3,
       beta: Double = 0.1, gamma: Double = 0.2): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-    val series = dailyGrid(daily)
-      .select(col("day"), col("n").cast("double").as("y"))
+    val series = dailyCountGrid(events)
+      .select(col("day"), col("cnt").cast("double").as("y"))
       .agg(array_sort(collect_list(struct(col("day"), col("y")))).as("sd"))
       .select(transform(col("sd"), x => x.getField("y")).as("ys"))
       .filter(size(col("ys")) >= 14)
@@ -6461,19 +6146,14 @@ object EventOps {
     * Determinism: every cell is an exact BIGINT count of per-user
     * boolean collapses; rates, DiD, SE and z are pinned double chains;
     * z is NULL when any cell variance is degenerate (p ∈ {0,1} in all
-    * cells → SE 0). Shape: one stats broadcast + one per-user hash agg
-    * + one 1-row collapse. */
+    * cells → SE 0); an empty arm has NULL rates, DiD and z. Shape: one
+    * stats broadcast + one per-user hash agg + one 1-row collapse. */
   def diffInDiff(events: DataFrame): DataFrame = {
-    val perUser = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
+    val perUser = withTimeRange(events)
       .select(col("user_id"),
-        when(col("event_type") === "purchase" &&
-          unix_micros(col("ts")) <= expr("(lo + hi) div 2"), 1L)
+        when(col("event_type") === "purchase" && inFirstHalf, 1L)
           .otherwise(0L).as("pre"),
-        when(col("event_type") === "purchase" &&
-          unix_micros(col("ts")) > expr("(lo + hi) div 2"), 1L)
+        when(col("event_type") === "purchase" && inSecondHalf, 1L)
           .otherwise(0L).as("post"))
       .groupBy("user_id")
       .agg(max(col("pre")).as("pre"), max(col("post")).as("post"))
@@ -6495,13 +6175,14 @@ object EventOps {
       (rate("x_c_post", "n_c") - rate("x_c_pre", "n_c"))
     val se = sqrt(cellVar("x_t_post", "n_t") + cellVar("x_t_pre", "n_t") +
       cellVar("x_c_post", "n_c") + cellVar("x_c_pre", "n_c"))
+    val ok = col("n_c") > 0L && col("n_t") > 0L
     cells.select(col("n_c"), col("n_t"),
-      round(rate("x_c_pre", "n_c"), 6).as("p_c_pre"),
-      round(rate("x_c_post", "n_c"), 6).as("p_c_post"),
-      round(rate("x_t_pre", "n_t"), 6).as("p_t_pre"),
-      round(rate("x_t_post", "n_t"), 6).as("p_t_post"),
-      round(did, 6).as("did"),
-      when(se > lit(0.0), round(did / se, 6)).as("z"))
+      when(col("n_c") > 0L, round(rate("x_c_pre", "n_c"), 6)).as("p_c_pre"),
+      when(col("n_c") > 0L, round(rate("x_c_post", "n_c"), 6)).as("p_c_post"),
+      when(col("n_t") > 0L, round(rate("x_t_pre", "n_t"), 6)).as("p_t_pre"),
+      when(col("n_t") > 0L, round(rate("x_t_post", "n_t"), 6)).as("p_t_post"),
+      when(ok, round(did, 6)).as("did"),
+      when(ok, when(se > lit(0.0), round(did / se, 6))).as("z"))
   }
 
   /** Wald's sequential probability ratio test over the daily
@@ -6634,16 +6315,11 @@ object EventOps {
     * Shape: one per-user collapse, one |d| grid collapse; the serial
     * window orders that bounded grid (the kruskal value-grid case). */
   def wilcoxonSignedRankAb(events: DataFrame): DataFrame = {
-    val perUser = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
+    val perUser = withTimeRange(events)
       .select(col("user_id"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"),
-          col("value").cast("decimal(12,2)"))
+        when(inFirstHalf, col("value").cast("decimal(12,2)"))
           .otherwise(lit(0).cast("decimal(12,2)")).as("pre"),
-        when(unix_micros(col("ts")) > expr("(lo + hi) div 2"),
-          col("value").cast("decimal(12,2)"))
+        when(inSecondHalf, col("value").cast("decimal(12,2)"))
           .otherwise(lit(0).cast("decimal(12,2)")).as("post"))
       .groupBy("user_id")
       .agg((sum(col("post")) * 100).cast("long").as("post_c"),
@@ -6679,16 +6355,11 @@ object EventOps {
   }
 
   def mcnemarSwitchers(events: DataFrame): DataFrame = {
-    val perUser = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
+    val perUser = withTimeRange(events)
       .select(col("user_id"),
-        when(col("event_type") === "purchase" &&
-          unix_micros(col("ts")) <= expr("(lo + hi) div 2"), 1L)
+        when(col("event_type") === "purchase" && inFirstHalf, 1L)
           .otherwise(0L).as("pre"),
-        when(col("event_type") === "purchase" &&
-          unix_micros(col("ts")) > expr("(lo + hi) div 2"), 1L)
+        when(col("event_type") === "purchase" && inSecondHalf, 1L)
           .otherwise(0L).as("post"))
       .groupBy("user_id")
       .agg(max(col("pre")).as("pre"), max(col("post")).as("post"))
@@ -6914,9 +6585,7 @@ object EventOps {
     * NULL G. Shape: one (day) hash agg, then a 1-row
     * TakeOrderedAndProject over the calendar frame. */
   def grubbsDaily(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
+    val grid = dailyCountGrid(events).select(col("day"), col("cnt").as("y"))
     val st = grid.agg(count(lit(1)).as("n"), sum("y").as("s"),
       sum(col("y").cast("decimal(38,0)") * col("y")).as("ss"))
     val nD = col("n").cast("double")
@@ -6960,10 +6629,7 @@ object EventOps {
     * [[cusumChangepoints]] bounded-serial shape, parallel across
     * types). */
   def pageHinkleyByType(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
+    val grid = typeDailyGrid(events).select("event_type", "day", "cnt")
     val w = Window.partitionBy("event_type").orderBy(col("day").asc)
     val run = grid.select(col("event_type"), col("day"), col("cnt"),
       sum(col("cnt")).over(
@@ -7016,9 +6682,7 @@ object EventOps {
     * (the [[ljungBoxDaily]] shift shape). */
   def kpssDaily(events: DataFrame, maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1, s"maxLag >= 1: $maxLag")
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
+    val grid = dailyCountGrid(events).select(col("day"), col("cnt").as("y"))
     val st = grid.agg(count(lit(1)).as("n"), sum("y").as("s"))
     val dev = grid.crossJoin(broadcast(st))
       .select(col("day"), col("n"),
@@ -7067,9 +6731,7 @@ object EventOps {
     * chains off them. Degenerate series (zero variance on either
     * side, |r| = 1, or n < 3 pairs) → NULL, stated. */
   def dfTestDaily(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
+    val grid = dailyCountGrid(events).select(col("day"), col("cnt").as("y"))
     val pairs = grid.as("a")
       .join(grid.select(expr("date_add(day, -1)").as("day"),
         col("y").as("y1")).as("b"), Seq("day"))
@@ -7169,10 +6831,7 @@ object EventOps {
     * [[kruskalWallisDailyCounts]] prefix shape); everything after is
     * grid-sized. */
   def kendallsWTypes(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily, "event_type")
+    val grid = typeDailyGrid(events)
       .select(col("event_type"), col("day"), col("cnt").as("v"))
     // per-(type, value) doubled midrank: 2r = 2·(# strictly below) +
     // (# tied) + 1, off the collapsed count-value frame
@@ -7224,9 +6883,7 @@ object EventOps {
     * differentials → NULL, stated. Shape: the [[forecastBacktest]]
     * lag windows per type over the collapsed grid, then k rows. */
   def dmNaiveVsSeasonal(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
+    val grid = typeDailyGrid(events).select("event_type", "day", "cnt")
     val w = Window.partitionBy("event_type").orderBy(col("day").asc)
     val d = grid
       .withColumn("l1", lag(col("cnt"), 1).over(w))
@@ -7395,9 +7052,7 @@ object EventOps {
     * never a theta join). */
   def ljungBoxDaily(events: DataFrame, maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1, s"maxLag >= 1: $maxLag")
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily).select(col("day"), col("cnt").as("y"))
+    val grid = dailyCountGrid(events).select(col("day"), col("cnt").as("y"))
     val st = grid.agg(count(lit(1)).as("n"), sum("y").as("s"))
     val dev = grid.crossJoin(broadcast(st))
       .select(col("day"), col("n"),
@@ -7452,6 +7107,180 @@ object EventOps {
       .select(Seq(col("day"), datediff(col("day"), col("d0")).as("t")) ++
         keys.map(col) ++ measures.map(f =>
           coalesce(col(f.name), lit(0).cast(f.dataType)).as(f.name)): _*)
+  }
+
+  // ---------- shared builders: one per SparkEntry oracle fragment ----------
+
+  /** [[dailyGrid]] over the per-day event count `cnt` (the oracle's
+    * `dailySeriesCtes`): day, t, cnt. */
+  private def dailyCountGrid(events: DataFrame): DataFrame =
+    dailyGrid(events.groupBy(to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt")))
+
+  /** [[dailyGrid]] over the per-(type, day) event count `cnt` (the
+    * oracle's `typeDailyCtes`): day, t, event_type, cnt. */
+  private def typeDailyGrid(events: DataFrame): DataFrame =
+    dailyGrid(events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt")), "event_type")
+
+  /** The events beside the first and last epoch microsecond `lo`/`hi`
+    * of their time range (one broadcast row): the midpoint split of
+    * the two-halves tests (the oracle's `halvesCtes`) puts an event in
+    * [[inFirstHalf]] up to `(lo + hi) div 2` and in [[inSecondHalf]]
+    * after it. */
+  private def withTimeRange(events: DataFrame): DataFrame =
+    events.crossJoin(broadcast(events.agg(
+      min(unix_micros(col("ts"))).as("lo"),
+      max(unix_micros(col("ts"))).as("hi"))))
+
+  private def inFirstHalf: Column =
+    unix_micros(col("ts")) <= expr("(lo + hi) div 2")
+
+  private def inSecondHalf: Column =
+    unix_micros(col("ts")) > expr("(lo + hi) div 2")
+
+  /** The `keys` of every event with its `half`, 1 or 2 (the oracle's
+    * `halvesCtes`). On a one-instant table (`lo` = `hi`) every event
+    * is in half 1 and half 2 is empty. */
+  private def halves(events: DataFrame, keys: Column*): DataFrame =
+    withTimeRange(events)
+      .select(keys :+ when(inFirstHalf, 1).otherwise(2).as("half"): _*)
+
+  /** [[halves]] per whole-unit value `bin`, with each half's event
+    * count `c1`/`c2` (the oracle's `binHalvesCtes`). */
+  private def binHalves(events: DataFrame): DataFrame =
+    halves(events, floor(col("value")).cast("long").as("bin"))
+      .groupBy("bin")
+      .agg(sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"),
+        sum(when(col("half") === 2, 1L).otherwise(0L)).as("c2"))
+
+  /** [[binHalves]] with each half's running count up to and including
+    * the bin, `cum1`/`cum2` (the two ECDFs of the drift tests), and
+    * the one-row half sizes (n1, n2). */
+  private def binHalvesEcdf(events: DataFrame): (DataFrame, DataFrame) = {
+    val counts = binHalves(events)
+    val w = Window.orderBy(col("bin").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    (counts.withColumn("cum1", sum(col("c1")).over(w))
+      .withColumn("cum2", sum(col("c2")).over(w)),
+      counts.agg(sum("c1").as("n1"), sum("c2").as("n2")))
+  }
+
+  /** The user-tenure risk table (the oracle's `tenureCtes` and
+    * `atRiskCtes`): per tenure `t`, the days from a user's first to
+    * last event day, the users `ending` there, the churns `d` among
+    * them (last event before the data's last day), the user count
+    * `n_users` and the number `n` still at risk. */
+  private def tenureRisk(events: DataFrame): DataFrame = {
+    val users = events.groupBy("user_id")
+      .agg(to_date(min(col("ts"))).as("f"), to_date(max(col("ts"))).as("l"))
+    val maxDay = events.agg(to_date(max(col("ts"))).as("max_day"))
+    val dur = users.crossJoin(broadcast(maxDay))
+      .select((datediff(col("l"), col("f")) + 1).cast("long").as("t"),
+        when(col("l") < col("max_day"), 1L).otherwise(0L).as("observed"))
+    val byT = dur.groupBy("t")
+      .agg(count(lit(1)).as("ending"), sum("observed").as("d"))
+    val total = dur.agg(count(lit(1)).as("n_users"))
+    val wPrior = Window.orderBy(col("t").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    byT.crossJoin(broadcast(total))
+      .withColumn("n",
+        col("n_users") - sum(col("ending")).over(wPrior) + col("ending"))
+  }
+
+  /** The two-arm form of [[tenureRisk]] (the oracle's `armTenureCtes`;
+    * arm = `user_id % 2`, arm 1 treated): the risk table with the arm-1
+    * `ending1`, `d1`, user count `n_users1` and at-risk `n1` beside the
+    * pooled columns, and the one-row user counts (n_users, n_users1). */
+  private def armTenureRisk(events: DataFrame): (DataFrame, DataFrame) = {
+    val users = events.groupBy("user_id")
+      .agg(to_date(min(col("ts"))).as("f"), to_date(max(col("ts"))).as("l"))
+    val maxDay = events.agg(to_date(max(col("ts"))).as("max_day"))
+    val dur = users.crossJoin(broadcast(maxDay))
+      .select((datediff(col("l"), col("f")) + 1).cast("long").as("t"),
+        when(col("l") < col("max_day"), 1L).otherwise(0L).as("observed"),
+        (col("user_id") % lit(2L)).as("arm"))
+    val byT = dur.groupBy("t").agg(
+      count(lit(1)).as("ending"), sum(col("observed")).as("d"),
+      sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("ending1"),
+      sum(when(col("arm") === 1L, col("observed")).otherwise(0L)).as("d1"))
+    val totals = dur.agg(count(lit(1)).as("n_users"),
+      sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("n_users1"))
+    val w = Window.orderBy(col("t").asc)
+      .rowsBetween(Window.unboundedPreceding, 0)
+    val risk = byT.crossJoin(broadcast(totals))
+      .withColumn("n",
+        col("n_users") - sum(col("ending")).over(w) + col("ending"))
+      .withColumn("n1",
+        col("n_users1") - sum(col("ending1")).over(w) + col("ending1"))
+    (risk, totals)
+  }
+
+  /** The value grid of every event-type pair (`ta` < `tb`), shared by
+    * [[mannWhitneyTypePairs]] and [[cliffsDeltaTypePairs]]: per 2dp
+    * value `v`, each type's count `ca`/`cb` and the counts strictly
+    * below `v`, `cum_a`/`cum_b`. */
+  private def typePairValueGrid(events: DataFrame): DataFrame = {
+    val cnts = events.groupBy(col("value").as("v"),
+      col("event_type").as("t")).agg(count(lit(1)).as("c"))
+    val types = cnts.select("t").distinct()
+    val pairs = types.as("x").join(types.as("y"),
+        col("x.t") < col("y.t"))
+      .select(col("x.t").as("ta"), col("y.t").as("tb"))
+    val combined = cnts.join(broadcast(pairs),
+        col("t") === col("ta") || col("t") === col("tb"))
+      .groupBy("ta", "tb", "v")
+      .agg(sum(when(col("t") === col("ta"), col("c")).otherwise(0L)).as("ca"),
+        sum(when(col("t") === col("tb"), col("c")).otherwise(0L)).as("cb"))
+    val w = Window.partitionBy("ta", "tb").orderBy(col("v").asc)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    combined
+      .withColumn("cum_a", coalesce(sum(col("ca")).over(w), lit(0L)))
+      .withColumn("cum_b", coalesce(sum(col("cb")).over(w), lit(0L)))
+  }
+
+  /** [[mannWhitneyTypePairs]]' pairs with a z and their two-sided
+    * normal p (the oracle's `mwPValueCtes`), each with its rank `rk`
+    * in the (p, type_a, type_b) order and the pair count `m`: the
+    * frame the BH, BY and Holm corrections adjust. Tiny, but its
+    * lineage is the whole Mann–Whitney pipeline, so the p-values and
+    * the ranks are each materialized once (the RankOps convention)
+    * for the self-joins that read them twice. */
+  private def mwRankedPValues(events: DataFrame): DataFrame = {
+    val mw = mannWhitneyTypePairs(events)
+      .filter(col("z").isNotNull)
+      .select(col("type_a"), col("type_b"), col("z"))
+    // two-sided p through the native A&S 26.2.17 tail expression
+    // (graft.functions.NormalTail — codegen'd, chain-pinned to the
+    // oracle's parenthesization)
+    //
+    // RESIDUAL LIBM ASSUMPTION (ADVICE r14, documented not hidden):
+    // unlike sprtDailyAb, which pins its ln values as JVM double
+    // literals, the tail here re-evaluates exp(−z²/2) on BOTH rails —
+    // JVM Math.exp vs DuckDB's C exp. Everything downstream of the
+    // 6dp round is pinned double arithmetic on identical inputs, so
+    // the ONLY divergence point is a ≤1-ulp libm difference in exp
+    // landing EXACTLY on a 6dp rounding boundary (probability ~1e-10
+    // per pair; re-pinning to micro-units cannot remove it because
+    // the risk sits at the first rint itself, and pinning z as
+    // literals is impossible for data-dependent values). If the gate
+    // ever red-rows here with |got−exp| = 1e-6 on p/p_bh, this is why.
+    val withP = mw.select(col("type_a"), col("type_b"), col("z"),
+      round(lit(2.0) *
+        graft.functions.NormalTail.normalTail(abs(col("z"))), 6).as("p"))
+      .localCheckpoint()
+    val m = withP.agg(count(lit(1)).as("m"))
+    // rank i = 1 + |pairs strictly before me in the (p, ta, tb) order|
+    val before = (col("a.p") < col("b.p")) ||
+      (col("a.p") === col("b.p") && (col("a.type_a") < col("b.type_a") ||
+        (col("a.type_a") === col("b.type_a") &&
+          col("a.type_b") < col("b.type_b"))))
+    withP.as("b").join(broadcast(withP.as("a")), before, "left")
+      .groupBy(col("b.type_a").as("type_a"), col("b.type_b").as("type_b"),
+        col("b.z").as("z"), col("b.p").as("p"))
+      .agg((count(col("a.p")) + lit(1L)).as("rk"))
+      .crossJoin(broadcast(m))
+      .localCheckpoint()
   }
 
   /** Yuen's trimmed-mean t-test between the A/B arms (Yuen '74) —
@@ -7631,13 +7460,7 @@ object EventOps {
     * corpus²), one hash re-collapse on the difference, one prefix
     * window over it. */
   def hodgesLehmannShift(events: DataFrame): DataFrame = {
-    val half = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
-      .select(floor(col("value")).cast("long").as("cv"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"), 1)
-          .otherwise(2).as("half"))
+    val half = halves(events, floor(col("value")).cast("long").as("cv"))
     val g1 = half.filter(col("half") === 1)
       .groupBy(col("cv").as("v1")).agg(count(lit(1)).as("c1"))
     val g2 = half.filter(col("half") === 2)
@@ -7672,9 +7495,7 @@ object EventOps {
     * them and the z clears the factor — (L₂ − 2E)/(2σ) computed as
     * one pinned chain. Fewer than 1 complete week → NULL z. */
   def pageTrendDow(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily)
+    val grid = dailyCountGrid(events)
       .select(
         (datediff(col("day"), lit("1970-01-01").cast("date")).cast("long") +
           lit(3L)).as("dd3"),
@@ -7728,16 +7549,7 @@ object EventOps {
     * Shape: the corpus collapses to the value-bin grid; prefix
     * windows and the term algebra run on that bounded frame. */
   def valueAdDrift(events: DataFrame): DataFrame = {
-    val half = events
-      .crossJoin(broadcast(events.agg(
-        min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi"))))
-      .select(floor(col("value")).cast("long").as("bin"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"), 1)
-          .otherwise(2).as("half"))
-    val counts = half.groupBy("bin")
-      .agg(sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("half") === 2, 1L).otherwise(0L)).as("c2"))
+    val counts = binHalves(events)
     val totals = counts.agg(sum("c1").as("n1"), sum("c2").as("n2"))
     val wPrev = Window.orderBy(col("bin").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -7851,9 +7663,8 @@ object EventOps {
     * dispersion. Shape: one corpus collapse to (type, day), the
     * dense-calendar fill, one k-row aggregate. */
   def negbinFitByType(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("x"))
-    val grid = dailyGrid(daily, "event_type").select("event_type", "x")
+    val grid = typeDailyGrid(events)
+      .select(col("event_type"), col("cnt").as("x"))
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val m = grid.groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("x").as("sx"),
@@ -7945,9 +7756,7 @@ object EventOps {
     * identical doubles, 6dp once. Degenerate controls (|r_xz| = 1) →
     * NULL, stated. */
   def partialCorrTypePairs(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily, "event_type").select("event_type", "day", "cnt")
+    val grid = typeDailyGrid(events).select("event_type", "day", "cnt")
       .localCheckpoint() // pair matrix + the control joins read it
     val zs = grid.groupBy("day").agg(sum("cnt").as("z"))
     val gz = grid.join(zs, "day")
@@ -8008,9 +7817,7 @@ object EventOps {
     * join is |calendar/7|² per season — calendar-bounded, never
     * corpus². */
   def seasonalMannKendall(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily)
+    val grid = dailyCountGrid(events)
       .select(col("day"),
         ((datediff(col("day"), lit("1970-01-01").cast("date"))
           .cast("long") + lit(3L)) % lit(7L) + lit(1L)).as("dow"),
@@ -8164,9 +7971,7 @@ object EventOps {
     import session.implicits._
     val pf = periods.map(p => (p.toLong, 2.0 * math.Pi / p))
       .toDF("period", "w")
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val terms = dailyGrid(daily).crossJoin(broadcast(pf))
+    val terms = dailyCountGrid(events).crossJoin(broadcast(pf))
       .select(col("period"),
         round(col("cnt").cast("double") *
           cos(col("t").cast("double") * col("w")) * lit(1000000.0), 0)
@@ -8241,9 +8046,7 @@ object EventOps {
     * calendar, a ≤6-row pattern frame. */
   def permutationEntropyDaily(events: DataFrame): DataFrame = {
     val w = Window.orderBy(col("t").asc)
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val tri = dailyGrid(daily)
+    val tri = dailyCountGrid(events)
       .select(col("t"), col("cnt").as("x0"),
         lead(col("cnt"), 1).over(w).as("x1"),
         lead(col("cnt"), 2).over(w).as("x2"))
@@ -8291,9 +8094,7 @@ object EventOps {
     * Shape: one daily collapse, one lead window, then a
     * calendar²-bounded template pair join — never corpus-sized. */
   def sampleEntropyDaily(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily)
+    val grid = dailyCountGrid(events)
       .localCheckpoint() // sigma lanes + the template window read it
     val dec = (c: Column) => c.cast("decimal(38,0)")
     // population sigma of the WHOLE series; r = 0.2 sigma
@@ -8350,9 +8151,7 @@ object EventOps {
     * mean/variance are rationals of n; one final division. n < 3 →
     * no row. */
   def turningPointsDaily(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val series = dailyGrid(daily)
+    val series = dailyCountGrid(events)
       .agg(array_sort(collect_list(struct(col("t"), col("cnt")))).as("sd"))
       .select(transform(col("sd"), x => x.getField("cnt")).as("ys"))
       .filter(size(col("ys")) >= 3)
@@ -8386,9 +8185,7 @@ object EventOps {
     * day span, never by corpus size. Constant series (zero
     * denominator) → NULL, stated. */
   def bartelsRankDaily(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val series = dailyGrid(daily)
+    val series = dailyCountGrid(events)
       .agg(array_sort(collect_list(struct(col("t"), col("cnt")))).as("sd"))
       .select(transform(col("sd"), x => x.getField("cnt")).as("ys"))
       .filter(size(col("ys")) >= 4)
@@ -8424,9 +8221,7 @@ object EventOps {
     * Determinism: counts exact BIGINT off the one array row; z is ONE
     * pinned division; zero non-tied pairs → NULL z, stated. */
   def coxStuartDaily(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val series = dailyGrid(daily)
+    val series = dailyCountGrid(events)
       .agg(array_sort(collect_list(struct(col("t"), col("cnt")))).as("sd"))
       .select(transform(col("sd"), x => x.getField("cnt")).as("ys"))
       .filter(size(col("ys")) >= 2)
@@ -8525,9 +8320,7 @@ object EventOps {
     * → no rows. Shape: the grid collapses once; each level is one
     * hash agg over ≤ 2^L rows. */
   def haarEnergyDaily(events: DataFrame, maxLevel: Int = 6): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = dailyGrid(daily).select("t", "cnt")
+    val grid = dailyCountGrid(events).select("t", "cnt")
     // lmax via an integer comparison chain, NOT floor(log2(n)) — at an
     // exact power of two the two engines' log implementations can land
     // an ulp apart and floor to different levels
@@ -8857,26 +8650,9 @@ object EventOps {
     * Shape: the Mann–Whitney value-grid collapse is the only
     * corpus-sized work; everything here is |types|²/2 rows. */
   def holmMwTypePairs(events: DataFrame, alpha: Double = 0.05): DataFrame = {
-    val mw = mannWhitneyTypePairs(events)
-      .filter(col("z").isNotNull)
-      .select(col("type_a"), col("type_b"), col("z"))
-    val withP = mw.select(col("type_a"), col("type_b"), col("z"),
-      round(lit(2.0) *
-        graft.functions.NormalTail.normalTail(abs(col("z"))), 6).as("p"))
-      .localCheckpoint()
-    val m = withP.agg(count(lit(1)).as("m"))
-    val before = (col("a.p") < col("b.p")) ||
-      (col("a.p") === col("b.p") && (col("a.type_a") < col("b.type_a") ||
-        (col("a.type_a") === col("b.type_a") &&
-          col("a.type_b") < col("b.type_b"))))
-    val ranked = withP.as("b").join(broadcast(withP.as("a")), before, "left")
-      .groupBy(col("b.type_a").as("type_a"), col("b.type_b").as("type_b"),
-        col("b.z").as("z"), col("b.p").as("p"))
-      .agg((count(col("a.p")) + lit(1L)).as("rk"))
-      .crossJoin(broadcast(m))
+    val ranked = mwRankedPValues(events)
       .withColumn("q", round(least(col("p") *
         (col("m") - col("rk") + lit(1L)).cast("double"), lit(1.0)), 6))
-      .localCheckpoint()
     val adj = ranked.as("b")
       .join(broadcast(ranked.as("a")), col("a.rk") <= col("b.rk"))
       .groupBy(col("b.type_a").as("type_a"), col("b.type_b").as("type_b"),
@@ -8951,6 +8727,7 @@ object EventOps {
     * broadcast horizons; two output rows per horizon. */
   def aalenJohansenCif(events: DataFrame,
       horizons: Seq[Int] = Seq(1, 7, 14, 30)): DataFrame = {
+    // not tenureRisk: the users also carry their last purchase day `pd`
     val users = events.groupBy("user_id")
       .agg(to_date(min(col("ts"))).as("f"), to_date(max(col("ts"))).as("l"),
         to_date(max(when(col("event_type") === "purchase", col("ts"))))
@@ -9017,6 +8794,7 @@ object EventOps {
     * broadcast horizons. */
   def mcfRecurrentPurchases(events: DataFrame,
       horizons: Seq[Int] = Seq(1, 7, 14, 30)): DataFrame = {
+    // not tenureRisk: a user's window runs from `f` to the data's end
     val entry = events.groupBy("user_id")
       .agg(to_date(min(col("ts"))).as("f"))
     val maxDay = events.agg(to_date(max(col("ts"))).as("max_day"))
@@ -9069,15 +8847,11 @@ object EventOps {
     *
     * Shape: one grouped pass over the corpus (4 cells). */
   def didParityArms(events: DataFrame): DataFrame = {
-    val bounds = events.agg(
-      min(unix_micros(col("ts"))).as("lo"),
-      max(unix_micros(col("ts"))).as("hi"))
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val cents = (Num.dec2(col("value")) * lit(100)).cast("long")
-    val cells = events.crossJoin(broadcast(bounds))
+    val cells = withTimeRange(events)
       .select((col("user_id") % lit(2L)).as("arm"),
-        when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"), 1L)
-          .otherwise(2L).as("half"),
+        when(inFirstHalf, 1L).otherwise(2L).as("half"),
         cents.as("c"))
       .groupBy("arm", "half")
       .agg(count(lit(1)).as("n"), sum("c").as("s"),
@@ -9150,15 +8924,10 @@ object EventOps {
     *
     * Shape: one grouped pass (per-user min/max epoch), a 1-row agg. */
   def captureRecaptureUsers(events: DataFrame): DataFrame = {
-    val bounds = events.agg(
-      min(unix_micros(col("ts"))).as("lo"),
-      max(unix_micros(col("ts"))).as("hi"))
-    val perUser = events.crossJoin(broadcast(bounds))
+    val perUser = withTimeRange(events)
       .groupBy("user_id")
-      .agg(max(when(unix_micros(col("ts")) <= expr("(lo + hi) div 2"),
-        1L).otherwise(0L)).as("in1"),
-        max(when(unix_micros(col("ts")) > expr("(lo + hi) div 2"),
-          1L).otherwise(0L)).as("in2"))
+      .agg(max(when(inFirstHalf, 1L).otherwise(0L)).as("in1"),
+        max(when(inSecondHalf, 1L).otherwise(0L)).as("in2"))
     val s = perUser.agg(sum("in1").as("n1"), sum("in2").as("n2"),
       sum(col("in1") * col("in2")).as("m"),
       count(lit(1)).as("n_seen"))
@@ -9337,28 +9106,9 @@ object EventOps {
     *
     * Shape: one per-user collapse, duration-frame work only. */
   def flemingHarringtonAb(events: DataFrame): DataFrame = {
-    val users = events.groupBy("user_id")
-      .agg(to_date(min(col("ts"))).as("f"), to_date(max(col("ts"))).as("l"))
-    val maxDay = events.agg(to_date(max(col("ts"))).as("max_day"))
-    val dur = users.crossJoin(broadcast(maxDay))
-      .select((datediff(col("l"), col("f")) + 1).cast("long").as("t"),
-        when(col("l") < col("max_day"), 1L).otherwise(0L).as("observed"),
-        (col("user_id") % lit(2L)).as("arm"))
-    val byT = dur.groupBy("t").agg(
-      count(lit(1)).as("ending"), sum(col("observed")).as("d"),
-      sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("ending1"),
-      sum(when(col("arm") === 1L, col("observed")).otherwise(0L)).as("d1"))
-    val totals = dur.agg(count(lit(1)).as("n_users"),
-      sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("n_users1"))
-    val wCum = Window.orderBy(col("t").asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
+    val (atRisk, totals) = armTenureRisk(events)
     val wPrev = Window.orderBy(col("t").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val atRisk = byT.crossJoin(broadcast(totals))
-      .withColumn("n",
-        col("n_users") - sum(col("ending")).over(wCum) + col("ending"))
-      .withColumn("n1",
-        col("n_users1") - sum(col("ending1")).over(wCum) + col("ending1"))
     val lnTerm = round(log((col("n") - col("d")).cast("double") /
       col("n").cast("double")), 10).cast("decimal(38,10)")
     val withS = atRisk

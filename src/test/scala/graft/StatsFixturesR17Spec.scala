@@ -1262,4 +1262,113 @@ class StatsFixturesR17Spec extends SparkSpec {
     assert(Option(got.getAs[java.lang.Double]("relative_risk")).isEmpty)
     assert(got.getAs[Double]("paf") == 1.0)
   }
+
+  test("degenerate tables: a one-instant table (half 2 empty) and a " +
+      "one-arm table (every user_id even) give NULL/false/no rows, " +
+      "never a division error") {
+    // every halves operator on one timestamp (lo = hi: half 2 empty),
+    // every arm-split operator on even user_ids only (arm 1 empty)
+    def frame(rows: Seq[(String, Long, String, Double)]) =
+      rows.toDF("s", "user_id", "event_type", "value")
+        .select(monotonically_increasing_id().as("event_id"),
+          col("s").cast("timestamp").as("ts"), col("user_id"),
+          col("event_type"), col("value"))
+    val oneInstant = frame(Seq(
+      ("2024-01-01 00:00:00", 1L, "view", 10.0),
+      ("2024-01-01 00:00:00", 2L, "purchase", 95.0),
+      ("2024-01-01 00:00:00", 3L, "click", 42.5),
+      ("2024-01-01 00:00:00", 4L, "purchase", 120.0)))
+    val oneArm = frame((0 until 40).map { i =>
+      (f"2024-01-${i % 20 + 1}%02d ${i % 24}%02d:00:00",
+        (i % 8 + 1).toLong * 2, Seq("view", "click", "purchase")(i % 3),
+        50.0 + (i * 7) % 60)
+    })
+    // the expected result: no rows, or in every row the `nulls`
+    // columns NULL and the `flags` columns as given
+    case class Expect(nulls: Seq[String] = Nil,
+        flags: Map[String, Boolean] = Map.empty, empty: Boolean = false)
+    val noRows = Expect(empty = true)
+    def nulls(cs: String*) = Expect(nulls = cs)
+    type Op = org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
+    val halves: Seq[(String, Op, Expect)] = Seq(
+      ("fanoFactorByType", EventOps.fanoFactorByType, Expect()),
+      ("valuePsiDrift", EventOps.valuePsiDrift, Expect()),
+      ("psiTypeDrift", EventOps.psiTypeDrift, noRows),
+      ("ksValueDrift", EventOps.ksValueDrift, nulls("ks_stat", "at_bin")),
+      ("valueMmdDrift", EventOps.valueMmdDrift,
+        nulls("mean_diff", "mmd_linear", "mmd_quad", "mmd_sq")),
+      ("valueKuiperDrift", EventOps.valueKuiperDrift,
+        nulls("d_plus", "d_minus", "kuiper_v")),
+      ("valueWassersteinDrift", EventOps.valueWassersteinDrift,
+        nulls("w1_distance")),
+      ("valueEnergyDrift", EventOps.valueEnergyDrift, nulls("energy_dist")),
+      ("valueCvmDrift", EventOps.valueCvmDrift,
+        Expect(Seq("cvm_t"), Map("drifted" -> false))),
+      ("valueAdDrift", EventOps.valueAdDrift, nulls("a2_akn")),
+      ("hodgesLehmannShift", EventOps.hodgesLehmannShift, nulls("hl_shift")),
+      ("markovNextEventAccuracy", EventOps.markovNextEventAccuracy,
+        nulls("accuracy", "baseline_accuracy")),
+      ("cupedAdjustedAb", EventOps.cupedAdjustedAb, Expect()),
+      ("scoreGainsDeciles", EventOps.scoreGainsDeciles(_),
+        nulls("cum_capture", "lift")),
+      ("propensityStratifiedAte", EventOps.propensityStratifiedAte(_),
+        nulls("effect", "ate")),
+      ("diffInDiff", EventOps.diffInDiff, nulls("z")),
+      ("wilcoxonSignedRankAb", EventOps.wilcoxonSignedRankAb, Expect()),
+      ("mcnemarSwitchers", EventOps.mcnemarSwitchers, Expect()),
+      ("didParityArms", EventOps.didParityArms, noRows),
+      ("captureRecaptureUsers", EventOps.captureRecaptureUsers,
+        nulls("lp_estimate")))
+    val arms: Seq[(String, Op, Expect)] = Seq(
+      ("cupedAdjustedAb", EventOps.cupedAdjustedAb,
+        nulls("mean_y_b", "raw_diff", "adj_diff")),
+      ("welchTtestAb", EventOps.welchTtestAb,
+        nulls("mean_b", "t_stat", "df")),
+      ("abConversionZtest", EventOps.abConversionZtest(_),
+        Expect(Seq("rate_b", "z_score"), Map("significant" -> false))),
+      ("diffInDiff", EventOps.diffInDiff,
+        nulls("p_t_pre", "p_t_post", "did", "z")),
+      ("propensityStratifiedAte", EventOps.propensityStratifiedAte(_),
+        nulls("effect", "ate")),
+      ("didParityArms", EventOps.didParityArms, noRows),
+      ("obrienFlemingMonitor", EventOps.obrienFlemingMonitor(_),
+        Expect(Seq("z_score"), Map("crossed" -> false))),
+      ("ratioMetricDeltaCi", EventOps.ratioMetricDeltaCi,
+        Expect(Seq("ratio_b", "se_b", "z_score"),
+          Map("significant" -> false))),
+      ("logrankTestAb", EventOps.logrankTestAb, nulls("logrank_z")),
+      ("coxPhAb", EventOps.coxPhAb,
+        Expect(Seq("beta", "hazard_ratio", "se", "z_score"),
+          Map("significant" -> false))),
+      ("quantileTreatmentEffect", EventOps.quantileTreatmentEffect(_),
+        nulls("q_b", "qte")),
+      ("abSrmCheck", EventOps.abSrmCheck,
+        Expect(flags = Map("srm_mismatch" -> true))),
+      ("sprtDailyAb", EventOps.sprtDailyAb(_), noRows),
+      ("yuenTrimmedTtestAb", EventOps.yuenTrimmedTtestAb(_), noRows),
+      ("ansariBradleyAb", EventOps.ansariBradleyAb, nulls("z_score")),
+      ("qiniUpliftDeciles", EventOps.qiniUpliftDeciles(_),
+        nulls("uplift", "qini")),
+      ("mantelHaenszelAb", EventOps.mantelHaenszelAb(_),
+        Expect(Seq("or_mh", "ln_or_mh", "cmh_chi2"),
+          Map("significant" -> false))),
+      ("smdBalanceArms", EventOps.smdBalanceArms, noRows),
+      ("flemingHarringtonAb", EventOps.flemingHarringtonAb, nulls("fh_z")))
+    val failures = for {
+      (fixture, ev, ops) <- Seq(("one-instant", oneInstant, halves),
+        ("one-arm", oneArm, arms))
+      (name, op, want) <- ops
+      problem <- scala.util.Try(op(ev).collect().toSeq) match {
+        case scala.util.Failure(e) => Some(s"threw ${e.getMessage.take(80)}")
+        case scala.util.Success(rows) =>
+          val bad = rows.filter(r => want.nulls.exists(c => !r.isNullAt(
+            r.fieldIndex(c))) || want.flags.exists { case (c, v) =>
+              r.isNullAt(r.fieldIndex(c)) || r.getAs[Boolean](c) != v })
+          if (want.empty && rows.nonEmpty) Some(s"${rows.size} rows")
+          else if (!want.empty && rows.isEmpty) Some("no rows")
+          else bad.headOption.map(r => s"row $r")
+      }
+    } yield s"$fixture $name: $problem"
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
 }
